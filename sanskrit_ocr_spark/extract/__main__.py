@@ -78,7 +78,8 @@ def main(argv: list[str] | None = None) -> int:
                    help="output table root (extracted/ + lineage/)")
     p.add_argument("--master", default="local[*]")
     p.add_argument("--salt-partitions", type=int, default=None,
-                   help="salted repartition width before the extract UDF")
+                   help="salted repartition width before the extract UDF "
+                        "(default: sized from the input scan's metadata)")
     p.add_argument("--shuffle-partitions", type=int, default=32)
     p.add_argument("--partitioned", action="store_true",
                    help="write the warc_day x url-bucket hive layout")

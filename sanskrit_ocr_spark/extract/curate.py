@@ -215,12 +215,9 @@ def curate_table(spark, corpus_root: str, extracted,
             dels = [d for d in extracted.deletes_in_range(wm, head)
                     if d["key"] == "url"]
             if dels:
-                replaced = None
-                for d in dels:
-                    one = spark.read.parquet(d["dir"]).select("url")
-                    replaced = one if replaced is None \
-                        else replaced.unionByName(one)
-                replaced = replaced.distinct()
+                replaced = (extracted.delete_frames(dels, head)["url"]
+                            .select(F.col("__dk").alias("url"))
+                            .distinct())
                 # each replaced url's latest in-range version (the NET
                 # delta holds at most one row per replaced url; the
                 # keep_first is a determinism guard for exact-ts ties)

@@ -27,6 +27,7 @@ from pyspark.sql.types import (
 from sanskrit_ocr_spark.extract.pipeline import (
     EXTRACTED_SCHEMA,
     extract_pages,
+    extract_width,
     lineage_rows,
 )
 from sanskrit_ocr_spark.tables.icelite import IceliteTable
@@ -167,9 +168,14 @@ def sync_publish_branch(ext: IceliteTable, branch: str,
         if head:
             ext.set_branch(branch, head)
     elif published < head:
-        ext.rollback_to(published)
+        # lineage first: its rows above ``published`` are unpublished by
+        # definition, so deleting them is always safe, and a crash before
+        # the rollback leaves head above the branch for the next run to
+        # heal again — the reverse order would strand them behind a head
+        # that already equals the branch
         if lin is not None and lin.snapshot_id():
             lin.delete_where(F.col("snapshot_id") > published)
+        ext.rollback_to(published)
 
 
 def audit_tallies(extracted: DataFrame) -> tuple[dict, float]:
@@ -260,6 +266,10 @@ def run_extraction(spark: SparkSession, pages: DataFrame, root: str,
     # committed-side anti-join whenever it commits at that same snapshot
     # (its CAS guarantees exactly that; a lost race falls back).
     probe_sid = ext.snapshot_id()
+    # size the extraction stage on the BARE pages scan, before the
+    # anti-join: probing the joined plan would run its stages under AQE
+    if salt_partitions is None:
+        salt_partitions = extract_width(pages)
     todo = pages if recrawl or not probe_sid else \
         pages.join(ext.read(probe_sid,
                             buckets=batch_bucket_ids).select("url"),
@@ -288,9 +298,9 @@ def run_extraction(spark: SparkSession, pages: DataFrame, root: str,
     import uuid
 
     stage_dir = os.path.join(root, "_staging_extract", uuid.uuid4().hex[:12])
-    extracted.write.mode("error").parquet(stage_dir)
-    extracted = spark.read.schema(extracted.schema).parquet(stage_dir)
     try:
+        extracted.write.mode("error").parquet(stage_dir)
+        extracted = spark.read.schema(extracted.schema).parquet(stage_dir)
         pre_sid = ext.snapshot_id()
         if recrawl:
             before = ext.row_count()

@@ -11,9 +11,11 @@ Scale posture:
 
 * **column pruning** — the stage selects exactly ``url, warc_ts, html``
   before the UDF so a scan over the wide pages table prunes to 3 columns;
-* **salted repartition** — host-skewed corpora (one mega-host) are spread by
-  ``xxhash64(url, warc_ts)`` before the expensive map; AQE skew handling
-  covers joins, not map stages, so this is explicit (SURVEY.md §4);
+* **salted repartition** — an input with fewer splits than cores is spread
+  by ``xxhash64(url, warc_ts)`` before the expensive map (AQE skew handling
+  covers joins, not map stages, so this is explicit, SURVEY.md §4); the
+  width comes from the bare input scan's metadata (``extract_width``), so
+  a one-Arrow-batch top-up runs in one task with no shuffle;
 * **bucket column** — ``part_hash = pmod(xxhash64(url), N_BUCKETS)`` is
   computed JVM-side (built-in ``xxhash64``) and doubles as the lineage
   partition key and the storage bucketing key.
@@ -22,9 +24,11 @@ Scale posture:
 from __future__ import annotations
 
 from collections.abc import Iterator
+from urllib.parse import unquote, urlparse
 
 import pandas as pd
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -38,6 +42,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from sanskrit_ocr_spark.conf import ARROW_BATCH_ROWS
 from sanskrit_ocr_spark.kernels.page import extract_page
 
 N_BUCKETS = 1024
@@ -113,44 +118,95 @@ def _extract_arrow_batches(
         )
 
 
+def _plan_nodes(plan) -> list:
+    """Every node of a JVM physical plan, pre-order."""
+    out = [plan]
+    kids = plan.children()
+    for i in range(kids.size()):
+        out.extend(_plan_nodes(kids.apply(i)))
+    return out
+
+
+def _fits_one_batch(pages: DataFrame, scans: list, max_files: int) -> bool:
+    """True when the parquet footers under ``pages`` hold at most
+    ``ARROW_BATCH_ROWS`` rows — an upper bound on its rows, read on the
+    driver with no Spark job. False for any other leaf, a non-local
+    path, or more than ``max_files`` files."""
+    if not all(n.getClass().getSimpleName() == "FileSourceScanExec"
+               and n.relation().fileFormat().getClass().getSimpleName()
+               == "ParquetFileFormat" for n in scans):
+        return False
+    files = pages.inputFiles()
+    if len(files) > max_files:
+        return False
+    rows = 0
+    for f in files:
+        u = urlparse(f)
+        if u.scheme not in ("", "file"):
+            return False
+        rows += pq.ParquetFile(unquote(u.path)).metadata.num_rows
+        if rows > ARROW_BATCH_ROWS:
+            return False
+    return True
+
+
+def extract_width(pages: DataFrame) -> int:
+    """Salted-repartition width for ``extract_pages`` (0 = keep the
+    scan's own splits), decided from what the driver already knows about
+    the bare input scan — no Spark job runs:
+
+    * a streaming input, or one whose plan already holds an exchange
+      (its split count is only known by running it — under AQE
+      ``getNumPartitions`` executes the upstream stages), gets
+      ``2 × defaultParallelism``;
+    * one split per core or more: 0. The salt's only job is parallelism
+      for the map stage, and shuffling the html payload for parallelism
+      the scan already has never paid for itself (interleaved A/B at 80k
+      rows / 32 splits on local[32]: salted 32.0/11.7/8.6 s per commit,
+      scan-direct 13.8/8.1/5.4 s);
+    * fewer splits than cores, over at most ``4 × defaultParallelism``
+      parquet files whose footers hold ≤ ``ARROW_BATCH_ROWS`` rows: 0.
+      That is one Arrow batch of UDF work, which a shuffle and
+      2 × cores Python tasks only slow down;
+    * otherwise ``2 × defaultParallelism`` — byte-based splits pack a
+      small corpus into one task, which would serialize the map.
+    """
+    par = pages.sparkSession.sparkContext.defaultParallelism
+    spread = 2 * par
+    if pages.isStreaming:
+        return spread
+    nodes = _plan_nodes(pages._jdf.queryExecution().executedPlan())
+    names = [n.getClass().getSimpleName() for n in nodes]
+    if any("Exchange" in n or n == "AdaptiveSparkPlanExec" for n in names):
+        return spread
+    if pages.rdd.getNumPartitions() >= par:
+        return 0
+    scans = [n for n in nodes if n.children().size() == 0]
+    return 0 if _fits_one_batch(pages, scans, 4 * par) else spread
+
+
 def extract_pages(pages: DataFrame, salt_partitions: int | None = None) -> DataFrame:
     """``pages(url, warc_ts, html, …)`` → extracted rows (EXTRACTED_SCHEMA).
 
     ``salt_partitions``: width of the salted repartition on
     ``xxhash64(url, warc_ts)`` before the UDF — spreads hot hosts /
-    duplicate urls across tasks AND guarantees the expensive map stage gets
-    full parallelism even when the scan coalesces small files into few
-    splits (``maxPartitionBytes`` packs a whole small test corpus into one
-    task otherwise). Default: ``2 × defaultParallelism``. Pass ``0`` to keep
-    the scan's natural partitioning (right for a 100 TB table whose scan
-    already yields thousands of splits and whose layout is already
-    url-bucketed — saves a full shuffle of the html payloads).
+    duplicate urls across tasks AND gives the expensive map stage full
+    parallelism when the scan coalesces small files into few splits.
+    Default (None): ``extract_width(pages)`` — no salt for an input of at
+    most ``ARROW_BATCH_ROWS`` rows or of one split per core or more, else
+    ``2 × defaultParallelism``. Pass ``0`` to keep the scan's natural
+    partitioning; an explicit width always forces the shuffle (hot-host
+    spreading for pathological inputs). Callers that feed a derived plan
+    (e.g. the resume anti-join) size it on the bare scan first and pass
+    the width in.
 
     The explicit partition count is deliberate: AQE does not coalesce a
     user-specified repartition width, so the map stage's parallelism is
     stable regardless of input byte size.
     """
-    pruned = pages.select("url", "warc_ts", "html")
-    par = pages.sparkSession.sparkContext.defaultParallelism
     if salt_partitions is None:
-        salt_partitions = 2 * par
-        # scale-adaptive default (r7): when the scan ALREADY yields one
-        # split per core, skip the salt — the repartition's only job is
-        # parallelism for the map stage, and a full shuffle of the html
-        # payload to get parallelism the scan already has is the classic
-        # needless exchange (guide §2.4; §8: move heavy bytes as few
-        # times as possible). Byte-based splits also bound per-task page
-        # volume, so value skew does not concentrate map work.
-        # Interleaved A/B at 80k rows / 32-split scan on local[32]:
-        # salted 32.0/11.7/8.6 s per commit vs scan-direct
-        # 13.8/8.1/5.4 s — the shuffle never pays for itself once every
-        # core has a split. An EXPLICIT salt_partitions still forces
-        # the shuffle (hot-host spreading for pathological inputs).
-        # (streaming inputs cannot be partition-probed — micro-batch
-        # sizing is the trigger's job there; keep the explicit salt)
-        if (not pruned.isStreaming
-                and pruned.rdd.getNumPartitions() >= par):
-            salt_partitions = 0
+        salt_partitions = extract_width(pages)
+    pruned = pages.select("url", "warc_ts", "html")
     if salt_partitions:
         pruned = pruned.repartition(salt_partitions,
                                     F.xxhash64("url", "warc_ts"))

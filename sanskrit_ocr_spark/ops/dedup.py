@@ -128,6 +128,7 @@ NGRAM_SUBSET = 300  # exhaustive pair space bounded for the oracle
 
 
 def dedup_ngram_jaccard(spark, sf):
+    release_caches()  # the previous call's _true_jaccard persists
     docs = t(spark, sf, "documents").filter(F.col("doc_id") < NGRAM_SUBSET)
     sh = _with_shingles(docs)
     all_pairs = (sh.select(F.col("doc_id").alias("a_id"), "sh")
@@ -578,6 +579,7 @@ def dedup_cluster_cc(spark, sf):
     docstring previously named (:func:`connected_components`) — O(log n)
     rounds, the ``CC_MAX_ITERS`` diameter cap gone. Same components as
     the recursive-CTE DuckDB oracle."""
+    release_caches()
     docs = t(spark, sf, "documents").select("doc_id")
     e0 = _dup_edges(spark, sf)
     stars, _ = connected_components(

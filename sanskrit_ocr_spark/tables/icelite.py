@@ -776,16 +776,7 @@ class IceliteTable:
         data = parts[0]
         for p in parts[1:]:
             data = data.unionByName(p)
-        by_key: dict[str, list[dict]] = {}
-        for d in deletes:
-            by_key.setdefault(d["key"], []).append(d)
-        for key, ds in by_key.items():
-            dk = None
-            for d in ds:
-                one = (self.spark.read.parquet(d["dir"])
-                       .select(F.col(key).alias("__dk"),
-                               F.lit(d["sid"]).alias("__dsid")))
-                dk = one if dk is None else dk.unionByName(one)
+        for key, dk in self.delete_frames(deletes, to_sid).items():
             data = data.join(
                 F.broadcast(dk),
                 (F.col(key) == F.col("__dk"))
@@ -857,21 +848,13 @@ class IceliteTable:
                    .withColumn("_change_type", F.lit("insert"))
                    .withColumn("_commit_sid", F.col("__csid")))
         events = inserts
-        by_key: dict[str, list[dict]] = {}
-        for d in deletes:
-            by_key.setdefault(d["key"], []).append(d)
+        by_key = self.delete_frames(deletes, to_sid)
         if by_key:
             # per-part csid is a literal, so this folds away every
             # group committed at/above the newest in-range delete
             cand = data.filter(F.col("__csid") < F.lit(max_dsid))
         del_cols: list[str] = []
-        for i, (key, ds) in enumerate(sorted(by_key.items())):
-            dk = None
-            for d in ds:
-                one = (self.spark.read.parquet(d["dir"])
-                       .select(F.col(key).alias("__dk"),
-                               F.lit(d["sid"]).alias("__dsid")))
-                dk = one if dk is None else dk.unionByName(one)
+        for i, (key, dk) in enumerate(sorted(by_key.items())):
             sched = (dk.groupBy("__dk")
                      .agg(F.sort_array(F.collect_set("__dsid"))
                           .alias("__dsids")))
@@ -893,6 +876,25 @@ class IceliteTable:
             events = inserts.unionByName(
                 dels.select(*inserts.columns))
         return events.select(*base_cols, "_change_type", "_commit_sid")
+
+    def delete_frames(self, deletes: list[dict],
+                      sid: int) -> dict[str, DataFrame]:
+        """Equality-delete entries → one union'd ``(__dk, __dsid)`` frame
+        per key column. Each key file is read under the key's type from
+        ``schema_at(sid)``: an explicit schema means planning a read
+        infers nothing, where a bare ``read.parquet(dir)`` runs one
+        schema-inference job per pending delete directory."""
+        schema = self.schema_at(sid)
+        out: dict[str, DataFrame] = {}
+        for d in deletes:
+            key = d["key"]
+            one = (self.spark.read.schema(StructType([schema[key]]))
+                   .parquet(d["dir"])
+                   .select(F.col(key).alias("__dk"),
+                           F.lit(d["sid"]).alias("__dsid")))
+            out[key] = one if key not in out else \
+                out[key].unionByName(one)
+        return out
 
     def _groups_at(self, sid: int) -> tuple[list, list]:
         """Per-commit file provenance + pending equality deletes at
@@ -1073,16 +1075,7 @@ class IceliteTable:
             data = parts[0]
             for p in parts[1:]:
                 data = data.unionByName(p)
-            by_key: dict[str, list[dict]] = {}
-            for d in deletes:
-                by_key.setdefault(d["key"], []).append(d)
-            for key, ds in by_key.items():
-                dk = None
-                for d in ds:
-                    one = (self.spark.read.parquet(d["dir"])
-                           .select(F.col(key).alias("__dk"),
-                                   F.lit(d["sid"]).alias("__dsid")))
-                    dk = one if dk is None else dk.unionByName(one)
+            for key, dk in self.delete_frames(deletes, sid).items():
                 data = data.join(
                     F.broadcast(dk),
                     (F.col(key) == F.col("__dk"))

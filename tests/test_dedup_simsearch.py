@@ -26,6 +26,20 @@ def test_minhash_lsh_recall_vs_exact(spark):
     assert len(caught) / len(high) >= 0.9
 
 
+@pytest.mark.parametrize("op", ["dedup_ngram_jaccard", "dedup_cluster_cc"])
+def test_dedup_repeat_call_persists_no_more_than_one(spark, op):
+    """``_SHINGLE_CACHE`` holds every frame an operator persisted and has
+    not released; a repeat call must not add to what one call leaves."""
+    fn = getattr(dedup, op)
+    dedup.release_caches()
+    fn(spark, SF).collect()
+    once = len(dedup._SHINGLE_CACHE)
+    fn(spark, SF).collect()
+    twice = len(dedup._SHINGLE_CACHE)
+    dedup.release_caches()
+    assert 0 < once and twice <= once
+
+
 def test_simhash_pairs_are_near_duplicates(spark, tmp_path):
     # sf0.001 may legitimately contain no hamming<=3 pairs, so the
     # detection property is asserted on a PLANTED corpus instead of
