@@ -370,10 +370,8 @@ def main(argv: list[str] | None = None) -> int:
             # Guard the layout flag against the table's ACTUAL layout:
             # compacting a hive-partitioned table under an unpartitioned
             # handle would seal the wrong schema and rewrite away the
-            # partition dirs. r5: the check reads the persisted partition
-            # spec (or, for legacy pre-r3 tables with plain 'commit-<n>'
-            # dir naming, probes for hive key dirs INSIDE the commit
-            # dirs), so legacy partitioned tables are caught too.
+            # partition dirs. The check reads the persisted partition
+            # spec.
             from sanskrit_ocr_spark.tables.icelite import IceliteTable
             on_disk_partitioned = bool(IceliteTable.stored_partition_cols(
                 os.path.join(args.root, "extracted")))

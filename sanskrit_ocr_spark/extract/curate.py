@@ -170,8 +170,8 @@ def curate_table(spark, corpus_root: str, extracted,
         bucket=("text_md5", bucket_hashes) if bucket_hashes else None)
 
     # latest recorded watermark: every commit inherits caller bookkeeping
-    # from its parent (IceliteTable._inherited_meta) and maintenance
-    # rewrites carry it via _carry_extra_meta, so the HEAD manifest
+    # from its parent (IceliteTable._inherited_meta), maintenance
+    # rewrites included, so the HEAD manifest
     # always holds the newest watermark — ONE manifest read, O(1) in
     # commit count (r5 VERDICT #7: the old parent-chain walk cost
     # O(commits) manifest reads when foreign appends interleaved).

@@ -21,7 +21,7 @@ as the incremental curation (``extract/curate.curate_table``):
   is never re-read again;
 * the extraction snapshot watermark rides the sidecar's commit manifest
   (``extra_meta``) atomically with the exported-url bookkeeping, and
-  survives sidecar maintenance (``_carry_extra_meta``).
+  survives sidecar maintenance (``_inherited_meta``).
 
 Segments land under ``<root>/segments`` (uuid-named, append-only,
 readable back via ``read_warc(..., warc_type="conversion")``).
@@ -52,9 +52,9 @@ def export_wet_incremental(spark, wet_root: str, extracted,
                             EXPORTED_SCHEMA)
 
     # O(1) watermark lookup: every commit inherits caller bookkeeping
-    # from its parent (IceliteTable._inherited_meta) and maintenance
-    # carries it via _carry_extra_meta, so the head manifest always has
-    # the newest watermark (r5 VERDICT #7)
+    # from its parent (IceliteTable._inherited_meta), maintenance
+    # rewrites included, so the head manifest always has the newest
+    # watermark (r5 VERDICT #7)
     cur = exported.snapshot_id()
     wm = exported._manifest(cur).get("wet_watermark", 0) if cur else 0
 

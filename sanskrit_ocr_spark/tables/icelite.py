@@ -13,6 +13,7 @@ Layout on disk::
     <root>/
       data/commit-<n>-<token>/part-*.parquet      unpartitioned commits
       data/__commit=<n>-<token>/<k>=<v>/...       hive-partitioned commits
+      data/delete-<n>-<token>/part-*.parquet      equality-delete keys
       _icelite/commits/<n>.json                   DELTA manifest (new files
                                                   only + parent pointer)
       _icelite/HEAD                               current snapshot id
@@ -41,12 +42,15 @@ a mid-job kill re-extracts only pages whose url is absent from the last
 ``datagen/translate_bookcorpus.py:37-50`` — checkpoint = count of committed
 sink rows — upgraded from offset-skip to key-based anti-join, SURVEY.md J3).
 
-Reads are ONE parquet scan regardless of commit count: unpartitioned
-commits resolve to an explicit file list; hive-partitioned commits name
-their directory ``__commit=<n>-<token>`` so the commit level itself parses
-as a (dropped) partition column under a shared ``basePath`` — a thousand
-incremental commits still plan as a single ``Scan parquet`` node with
-PartitionFilters intact, instead of a thousand-way union.
+Reads plan one data scan per physical layout and one delete scan per key
+column, whatever the commit count: unpartitioned commits resolve to an
+explicit file list; hive-partitioned commits name their directory
+``__commit=<n>-<token>`` so the commit level parses as a (dropped)
+partition column under a shared ``basePath``, PartitionFilters intact.
+Pending merge-on-read equality deletes need each row's commit id; it is
+parsed from the row's file path (every data and delete directory carries
+its commit id in its name), so a thousand incremental commits still plan
+as one scan anti-joined against one delete scan, not a thousand-way union.
 """
 
 from __future__ import annotations
@@ -130,10 +134,8 @@ class IceliteTable:
         if os.path.exists(os.path.join(root, "_icelite", "ROLLBACK")):
             self._complete_rollback()
         # persist the partition spec so maintenance tooling can validate
-        # a handle's layout flag against the table's actual layout (r5
-        # ADVICE: a legacy 'commit-<n>'-named partitioned table passes a
-        # name-prefix probe and would be compacted under the wrong
-        # schema). Written once at CREATION — only while the table has no
+        # a handle's layout flag against the table's actual layout.
+        # Written once at CREATION — only while the table has no
         # commits yet (r6 ADVICE: opening a pre-existing data-bearing
         # table with a mistakenly-partitioned handle must not mint a
         # wrong immutable spec that stored_partition_cols would then
@@ -168,9 +170,9 @@ class IceliteTable:
                             for c in stored)):
                 # adopt the active spec (same auto-load discipline as
                 # stat/sort/bucket specs) when the handle's schema can
-                # express it; legacy partitioned tables whose handle
-                # schema lacks the layout columns stay un-adopted and
-                # are caught by the --maintain stored-spec guard
+                # express it; a handle whose schema lacks the layout
+                # columns stays un-adopted and is caught by the
+                # --maintain stored-spec guard
                 self.partition_cols = stored
         # stat-cols declaration: written at creation, loaded by later
         # handles that don't pass it (e.g. --maintain) so compaction
@@ -287,14 +289,18 @@ class IceliteTable:
         # reports "already the active spec") — instead of the old
         # order's history-asserts-an-evolution-the-spec-never-recorded
         # state, which silently kept staging under the OLD layout with
-        # no recovery path. ``from_sid`` is the intended marker sid; on
-        # a lost commit race the previous spec file is restored.
+        # no recovery path. ``from_sid`` is the marker sid: the marker
+        # commits AT it (compare-and-swap on the parent read here), so a
+        # commit interloping after the spec write makes the marker fail
+        # instead of landing one sid late with the interloper attributed
+        # to the new spec. On any failure the previous spec file is
+        # restored.
         prev_spec = None
         if os.path.exists(spec_path):
             with open(spec_path) as f:
                 prev_spec = f.read()
-        intended_sid = self.snapshot_id() + 1
-        history.append({"cols": new_cols, "from_sid": intended_sid})
+        parent = self.snapshot_id()
+        history.append({"cols": new_cols, "from_sid": parent + 1})
         fd, tmp = tempfile.mkstemp(dir=os.path.join(self.root, "_icelite"))
         with os.fdopen(fd, "w") as f:
             json.dump({"partition_cols": new_cols, "history": history}, f)
@@ -304,8 +310,9 @@ class IceliteTable:
             # resolve the layout columns regardless of creation schema
             sid = self.commit_meta({
                 "spec_evolved_to": new_cols,
-                "schema": self.current_schema().jsonValue()})
-        except ConcurrentCommitError:
+                "schema": self.schema_at(parent).jsonValue()},
+                expected_parent=parent)
+        except BaseException:
             # restore the pre-evolution spec — the marker never landed
             if prev_spec is None:
                 os.unlink(spec_path)
@@ -354,8 +361,8 @@ class IceliteTable:
         from the directory structure (synthetic ``__commit``/``__bucket``
         levels excluded). A plain ``.parquet`` entry is the unpartitioned
         layout ``()``. Attribution is physical rather than manifest-
-        recorded so seals/compactions/legacy manifests that merge files
-        from many commits need no per-file spec bookkeeping — the layout
+        recorded so seals and compactions that merge files from many
+        commits need no per-file spec bookkeeping — the layout
         IS the spec. Driver-side metadata: one listdir per nesting level
         of ONE representative chain."""
         base = os.path.basename(os.path.normpath(entry))
@@ -377,58 +384,22 @@ class IceliteTable:
 
     @staticmethod
     def stored_partition_cols(root: str) -> list[str] | None:
-        """The partition spec the table was CREATED with, independent of
-        this handle's flags: the persisted ``partition_spec.json`` when
-        present, else (legacy tables predating the spec file) a probe of
-        the data layout — ``__commit=`` dir naming, or hive ``key=`` dirs
-        nested inside plain ``commit-<n>`` dirs (the pre-r3 partitioned
-        layout; the probe reports the top-level key(s) — enough to detect
-        a partitioned layout). Returns ``None`` when the layout cannot be
-        determined (no spec file and no data yet)."""
+        """The table's active partition spec, independent of this
+        handle's flags: the persisted ``partition_spec.json`` (written
+        when a partitioned table is created, rewritten only by
+        ``evolve_partition_spec``). Without it the table is unpartitioned
+        — ``[]`` once a data commit directory exists (a bucket-only
+        layout included) — or ``None`` when there is no data yet to tell."""
         spec_path = os.path.join(root, "_icelite", "partition_spec.json")
         if os.path.exists(spec_path):
             with open(spec_path) as f:
                 return json.load(f)["partition_cols"]
         data_dir = os.path.join(root, "data")
-        if not os.path.isdir(data_dir):
-            return None
-        entries = sorted(os.listdir(data_dir))
-        if not entries:
-            return None
-        cols: list[str] = []
-        seen_commit_dir = False
-        for name in entries:
-            sub = os.path.join(data_dir, name)
-            # only data-commit dirs witness the layout (delete-* dirs are
-            # MOR equality-delete sets, always flat)
-            if not os.path.isdir(sub) or not (
-                    name.startswith("__commit=")
-                    or name.startswith("commit-")):
-                continue
-            entries_in = sorted(os.listdir(sub))
-            has_data = any(e.endswith(".parquet") for e in entries_in)
-            for inner in entries_in:
-                if "=" in inner and os.path.isdir(
-                        os.path.join(sub, inner)):
-                    col = inner.split("=", 1)[0]
-                    if col == "__bucket":
-                        # synthetic bucket level: witnesses the layout
-                        # (conclusively NOT user-partitioned at this
-                        # level) without being a partition column
-                        has_data = True
-                        continue
-                    if col != "__commit" and col not in cols:
-                        cols.append(col)
-            if not cols and not has_data:
-                # inconclusive commit dir (e.g. a historical empty-batch
-                # commit holding only _SUCCESS) — keep probing; breaking
-                # here would misclassify a legacy partitioned table as
-                # unpartitioned and let --maintain rewrite away its
-                # layout (r5 review)
-                continue
-            seen_commit_dir = True
-            break  # one CONCLUSIVE commit dir determines the layout
-        return cols if seen_commit_dir else None
+        if os.path.isdir(data_dir) and any(
+                n.startswith(("commit-", "__commit="))
+                for n in os.listdir(data_dir)):
+            return []
+        return None
 
     # -- snapshot bookkeeping -------------------------------------------------
     def _head_path(self) -> str:
@@ -449,9 +420,9 @@ class IceliteTable:
 
     def files_at(self, sid: int) -> list[str]:
         """Cumulative data files/dirs of snapshot ``sid``, resolved by
-        walking delta manifests up the parent chain (memoized). Manifests
-        carrying a full list — legacy ``files`` form, or ``full: true``
-        written by compact()/expire_snapshots() — terminate the walk."""
+        walking delta manifests up the parent chain (memoized). A full
+        manifest (``full: true``, written by compact()/delete_where()/
+        expire_snapshots()) carries the whole list and ends the walk."""
         if not sid:
             return []
         self._check_rollback_epoch()
@@ -461,9 +432,6 @@ class IceliteTable:
         cur = sid
         while cur:
             m = self._manifest(cur)
-            if "files" in m:  # legacy cumulative form
-                chain.append(m["files"])
-                break
             chain.append(m["new_files"])
             if m.get("full"):
                 break
@@ -593,7 +561,7 @@ class IceliteTable:
             m = self._manifest(cur)
             for k, v in m.get("file_stats", {}).items():
                 out.setdefault(k, v)
-            if "files" in m or m.get("full"):
+            if m.get("full"):
                 break
             cur = m["parent"]
         return out
@@ -629,9 +597,9 @@ class IceliteTable:
                     to_sid: int) -> tuple[list, list]:
         """Per-commit provenance of ``(since_sid, to_sid]``:
         ``([(sid, [files...]) oldest-first], [delete entries])``. Raises
-        ``ValueError`` when the range crosses a compacted/sealed/
-        legacy-cumulative manifest (per-commit provenance gone) or
-        ``since_sid`` is not an ancestor of ``to_sid``."""
+        ``ValueError`` when the range crosses a full (compacted/sealed)
+        manifest (per-commit provenance gone) or ``since_sid`` is not an
+        ancestor of ``to_sid``."""
         if since_sid > to_sid:
             raise ValueError(f"since {since_sid} is newer than {to_sid}")
         groups: list = []
@@ -639,7 +607,7 @@ class IceliteTable:
         cur = to_sid
         while cur and cur > since_sid:
             m = self._manifest(cur)
-            if "files" in m or m.get("full"):
+            if m.get("full"):
                 raise ValueError(
                     f"commit {cur} is a full/sealed manifest — "
                     f"per-commit changes below it are unavailable")
@@ -665,46 +633,53 @@ class IceliteTable:
         _, deletes = self._range_walk(since_sid, to_sid)
         return deletes
 
-    def _read_file_group(self, files: list[str], schema: StructType,
-                         buckets: list[int] | None = None) -> DataFrame:
-        """One commit group's data files → DataFrame (the three layout
-        branches shared by ``read`` and ``read_changes``). ``buckets``
-        restricts a bucket-layout table to the given ``__bucket``
-        partition values — a filter on the synthetic hive level, so
-        Catalyst's partition pruning drops the other bucket directories
-        at planning time (the scan's inputFiles shrink to the matching
-        buckets)."""
-        from pyspark.sql.types import LongType
+    # commit id of a data or delete file, parsed from its commit-level
+    # directory right under ``data/`` (``commit-<sid>-``,
+    # ``__commit=<sid>-`` or ``delete-<sid>-``); the greedy prefix
+    # anchors on the LAST such level, so a table root that itself
+    # contains ``/data/`` parses the same
+    _PATH_SID = r".*/data/(?:commit-|__commit=|delete-)(\d+)-"
 
-        names = [os.path.basename(os.path.normpath(f)) for f in files]
-        if (not self._phys_cols
-                and not any(n.startswith("__commit=") for n in names)):
-            # pure flat layout (never-evolved unpartitioned table): one
-            # scan node, zero filesystem probes
-            return self.spark.read.schema(schema).parquet(*files)
-        # partition-spec evolution leaves MIXED layouts behind: group the
-        # entries by their PHYSICAL layout (probed from the dir
-        # structure) and union one scan per layout — pre-evolution rows
-        # carry the partition values as data columns, post-evolution
-        # rows carry them in directory names, so every group yields the
-        # same logical schema. Never-evolved tables land in exactly one
-        # group and keep their single scan node.
-        flat = [f for f, n in zip(files, names) if n.endswith(".parquet")]
-        legacy = [f for f, n in zip(files, names)
-                  if not n.endswith(".parquet")
-                  and not n.startswith("__commit=")]
+    @classmethod
+    def _path_sid(cls):
+        """Each row's commit id on a file-source DataFrame, from the
+        hidden ``_metadata.file_path`` column: one expression for every
+        commit, so any number of commits stays one scan node."""
+        return F.regexp_extract(F.col("_metadata.file_path"),
+                                cls._PATH_SID, 1).cast("long")
+
+    def _read_file_group(self, files: list[str], schema: StructType,
+                         buckets: list[int] | None = None,
+                         csid: bool = False) -> DataFrame:
+        """Data entries → DataFrame with ONE parquet scan per physical
+        layout: flat ``.parquet`` entries as an explicit file list, and
+        ``__commit=`` directories grouped by their hive layout (probed
+        from the dir structure) under a shared ``basePath``. Partition-
+        spec evolution leaves mixed layouts behind — pre-evolution rows
+        carry the partition values as data columns, post-evolution rows
+        in directory names — so every group yields the same logical
+        schema; a never-evolved table is one group and one scan.
+
+        ``buckets`` restricts a bucket-layout table to the given
+        ``__bucket`` partition values. ``csid=True`` adds ``__csid``,
+        each row's commit id parsed from its file path."""
+        def scan(reader, paths, hidden=()):
+            out = reader.parquet(*paths)
+            if csid:
+                out = out.withColumn("__csid", self._path_sid())
+            return out.drop(*hidden)
+
+        flat: list[str] = []
         by_layout: dict[tuple, list[str]] = {}
-        for f, n in zip(files, names):
-            if n.startswith("__commit="):
+        for f in files:
+            if os.path.basename(os.path.normpath(f)).startswith(
+                    "__commit="):
                 by_layout.setdefault(self._entry_layout(f), []).append(f)
+            else:
+                flat.append(f)
         parts: list[DataFrame] = []
         if flat:
-            parts.append(self.spark.read.schema(schema).parquet(*flat))
-        for f in legacy:
-            # legacy pre-r3 layout: plain commit-<n> dirs, per-dir scan
-            # (never carries a bucket level — the layout predates it)
-            parts.append(self.spark.read.schema(schema)
-                         .option("basePath", f).parquet(f))
+            parts.append(scan(self.spark.read.schema(schema), flat))
         for _lay, group in sorted(by_layout.items()):
             paths = group
             if buckets is not None and self.bucket:
@@ -725,17 +700,65 @@ class IceliteTable:
             extra = [StructField("__commit", StringType(), True)]
             if self.bucket:
                 extra.append(StructField("__bucket", LongType(), True))
-            out = (self.spark.read
-                   .schema(StructType(list(schema.fields) + extra))
-                   .option("basePath", os.path.join(self.root, "data"))
-                   .parquet(*paths))
-            parts.append(out.drop(*[f.name for f in extra]))
+            parts.append(scan(
+                self.spark.read
+                .schema(StructType(list(schema.fields) + extra))
+                .option("basePath", os.path.join(self.root, "data")),
+                paths, [f.name for f in extra]))
         if not parts:
-            return self.spark.createDataFrame([], schema)
+            return self.spark.createDataFrame([], StructType(
+                list(schema.fields)
+                + ([StructField("__csid", LongType())] if csid else [])))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
+
+    @staticmethod
+    def _applicable(deletes: list[dict], groups: list) -> list[dict]:
+        """The ``deletes`` that can remove a row of ``groups``: a delete
+        at commit s only removes rows committed before s, so one at or
+        below the oldest non-empty group is dropped on the driver.
+        Catalyst cannot see that through a path-parsed commit id, so the
+        join would otherwise run — e.g. on every ``read_changes`` of a
+        range holding one merge-on-read commit, whose delete removes
+        nothing in range."""
+        oldest = min((c for c, fs in groups if fs), default=None)
+        if oldest is None:
+            return []
+        return [d for d in deletes if d["sid"] > oldest]
+
+    def _scan_live(self, files: list[str], groups: list,
+                   deletes: list[dict], schema: StructType, sid: int,
+                   buckets: list[int] | None = None) -> DataFrame:
+        """``files`` (the entries of ``groups``) minus the rows the
+        equality ``deletes`` remove — Iceberg v2 semantics: a delete at
+        commit s removes rows with a matching key committed before s, so
+        a same-commit re-insert survives. Delete sets are O(batch): ONE
+        broadcast anti-join per key column against ONE delete scan, the
+        "older only" guard comparing the row's ``__csid`` with the
+        delete's ``__dsid`` (both parsed from file paths). With no
+        applicable delete the read is the plain scan — the plan of a
+        table without pending deletes, byte for byte.
+
+        Why path-parsed ids are exact: a file's directory carries the
+        id of the commit that staged it, which is its group's commit id
+        except for files a full manifest carries forward (delete_where
+        keeps untouched files; an expire seal without ``file_groups``
+        merges every group) — and those sit below every delete that can
+        apply to them, since both manifests require no pending delete
+        beneath them."""
+        deletes = self._applicable(deletes, groups)
+        if not deletes:
+            return self._read_file_group(files, schema, buckets)
+        data = self._read_file_group(files, schema, buckets, csid=True)
+        for key, dk in self.delete_frames(deletes, sid).items():
+            data = data.join(
+                F.broadcast(dk),
+                (F.col(key) == F.col("__dk"))
+                & (F.col("__csid") < F.col("__dsid")),
+                "left_anti")
+        return data.drop("__csid")
 
     def read_changes(self, since_sid: int, to_sid: int | None = None,
                      apply_deletes: bool = True) -> DataFrame:
@@ -749,8 +772,8 @@ class IceliteTable:
 
         Semantics (r6): the NET additions of the range — equality
         deletes committed IN the range are applied to in-range rows from
-        older in-range commits (same union'd broadcast anti-join shape
-        as the merge-on-read ``read`` path), so a url recrawled twice in
+        older in-range commits (the merge-on-read ``read`` path's
+        anti-join, ``_scan_live``), so a url recrawled twice in
         one window contributes only its latest version. Deletes' effect
         on PRE-range rows is intentionally not represented here (this is
         an additions view, not a row-level changelog) — consumers that
@@ -758,31 +781,19 @@ class IceliteTable:
         ``deletes_in_range``. ``apply_deletes=False`` restores the r5
         raw insert-only view (every in-range version, once per commit).
         Metadata-only commits contribute nothing. Raises ``ValueError``
-        when the range crosses a compacted/sealed/legacy-cumulative
-        manifest (the per-commit provenance no longer exists there);
-        callers fall back to a full ``read()`` — any keyed MERGE
-        downstream makes that fallback merely slower, never wrong."""
+        when the range crosses a full (compacted/sealed) manifest (the
+        per-commit provenance no longer exists there); callers fall
+        back to a full ``read()`` — any keyed MERGE downstream makes
+        that fallback merely slower, never wrong."""
         to_sid = self.snapshot_id() if to_sid is None else to_sid
         schema = self.schema_at(to_sid)
         groups, deletes = self._range_walk(since_sid, to_sid)
-        if not groups:
+        files = [f for _, fs in groups for f in fs]
+        if not files:
             return self.spark.createDataFrame([], schema)
-        if not (apply_deletes and deletes):
-            return self._read_file_group(
-                [f for _, fs in groups for f in fs], schema)
-        parts = [self._read_file_group(fs, schema)
-                 .withColumn("__csid", F.lit(csid))
-                 for csid, fs in groups]
-        data = parts[0]
-        for p in parts[1:]:
-            data = data.unionByName(p)
-        for key, dk in self.delete_frames(deletes, to_sid).items():
-            data = data.join(
-                F.broadcast(dk),
-                (F.col(key) == F.col("__dk"))
-                & (F.col("__csid") < F.col("__dsid")),
-                "left_anti")
-        return data.drop("__csid")
+        return self._scan_live(files, groups,
+                               deletes if apply_deletes else [],
+                               schema, to_sid)
 
     def read_changelog(self, since_sid: int,
                        to_sid: int | None = None) -> DataFrame:
@@ -807,11 +818,12 @@ class IceliteTable:
         needs to stay exact under re-crawls — ``read_changes`` (the NET
         additions view) cannot retract pre-range state.
 
-        Scale shape: inserts come straight from the delta manifests'
-        files (O(new data)); delete pre-images need the data visible at
-        ``to_sid`` joined against the pending delete keys — one
-        broadcast join (delete sets are O(recrawl batch)), with the
-        per-key delete schedule folded to a sorted array so each
+        Scale shape: the driver picks each side's files by group commit
+        id. Inserts read only the in-range commits' files (O(new
+        data)); delete pre-images read the files committed below the
+        newest in-range delete, joined against the pending delete keys
+        — one broadcast join (delete sets are O(recrawl batch)), with
+        the per-key delete schedule folded to a sorted array so each
         physical row resolves its fate with one ``array_min(filter())``
         instead of one join per delete commit. Same ``ValueError``
         contract as ``read_changes`` when the range crosses a
@@ -821,80 +833,73 @@ class IceliteTable:
         schema = self.schema_at(to_sid)
         # provenance check (raises on seals) + the range's own deletes:
         # only THEY can emit delete events, so a range without them is
-        # an inserts-only plan — pre-range file groups constant-fold
-        # out of the scan (plan-pinned in tests/test_changelog.py)
+        # an inserts-only plan that reads no pre-range file (plan-pinned
+        # in tests/test_changelog.py)
         _, range_deletes = self._range_walk(since_sid, to_sid)
         groups, deletes = self._groups_at(to_sid)
-        if not range_deletes:
-            deletes = []
-        else:
-            # rows committed at/above the newest in-range delete cannot
-            # die in range — bound the pre-image scan there
-            max_dsid = max(d["sid"] for d in range_deletes)
-        base_cols = [f.name for f in schema.fields]
-        out_schema = StructType(
-            list(schema.fields)
-            + [StructField("_change_type", StringType(), False),
-               StructField("_commit_sid", LongType(), False)])
-        parts = [self._read_file_group(fs, schema)
-                 .withColumn("__csid", F.lit(csid))
-                 for csid, fs in groups if fs]
-        if not parts:
-            return self.spark.createDataFrame([], out_schema)
-        data = parts[0]
-        for p in parts[1:]:
-            data = data.unionByName(p)
-        inserts = (data.filter(F.col("__csid") > F.lit(since_sid))
-                   .withColumn("_change_type", F.lit("insert"))
-                   .withColumn("_commit_sid", F.col("__csid")))
-        events = inserts
-        by_key = self.delete_frames(deletes, to_sid)
+        cols = [f.name for f in schema.fields] + ["_change_type",
+                                                  "_commit_sid"]
+        events: list[DataFrame] = []
+        added = [f for csid, fs in groups if csid > since_sid for f in fs]
+        if added:
+            events.append(self._read_file_group(added, schema, csid=True)
+                          .withColumn("_change_type", F.lit("insert"))
+                          .withColumn("_commit_sid", F.col("__csid")))
+        # rows committed at/above the newest in-range delete cannot die
+        # in range — bound the pre-image scan there
+        max_dsid = max((d["sid"] for d in range_deletes), default=0)
+        older = [(csid, fs) for csid, fs in groups if csid < max_dsid]
+        by_key = self.delete_frames(self._applicable(deletes, older),
+                                    to_sid)
         if by_key:
-            # per-part csid is a literal, so this folds away every
-            # group committed at/above the newest in-range delete
-            cand = data.filter(F.col("__csid") < F.lit(max_dsid))
-        del_cols: list[str] = []
-        for i, (key, dk) in enumerate(sorted(by_key.items())):
-            sched = (dk.groupBy("__dk")
-                     .agg(F.sort_array(F.collect_set("__dsid"))
-                          .alias("__dsids")))
-            col = f"__del_{i}"
-            cand = (cand.join(F.broadcast(sched),
-                              F.col(key) == F.col("__dk"), "left")
-                    .withColumn(col, F.array_min(F.filter(
-                        F.col("__dsids"),
-                        lambda s: s > F.col("__csid"))))
-                    .drop("__dk", "__dsids"))
-            del_cols.append(col)
-        if del_cols:
+            cand = self._read_file_group(
+                [f for _, fs in older for f in fs], schema, csid=True)
+            del_cols: list[str] = []
+            for i, (key, dk) in enumerate(sorted(by_key.items())):
+                sched = (dk.groupBy("__dk")
+                         .agg(F.sort_array(F.collect_set("__dsid"))
+                              .alias("__dsids")))
+                col = f"__del_{i}"
+                cand = (cand.join(F.broadcast(sched),
+                                  F.col(key) == F.col("__dk"), "left")
+                        .withColumn(col, F.array_min(F.filter(
+                            F.col("__dsids"),
+                            lambda s: s > F.col("__csid"))))
+                        .drop("__dk", "__dsids"))
+                del_cols.append(col)
             fate = (F.least(*del_cols) if len(del_cols) > 1
                     else F.col(del_cols[0]))
-            dels = (cand.withColumn("__del_sid", fate)
-                    .filter(F.col("__del_sid") > F.lit(since_sid))
-                    .withColumn("_change_type", F.lit("delete"))
-                    .withColumn("_commit_sid", F.col("__del_sid")))
-            events = inserts.unionByName(
-                dels.select(*inserts.columns))
-        return events.select(*base_cols, "_change_type", "_commit_sid")
+            events.append(cand.withColumn("__del_sid", fate)
+                          .filter(F.col("__del_sid") > F.lit(since_sid))
+                          .withColumn("_change_type", F.lit("delete"))
+                          .withColumn("_commit_sid", F.col("__del_sid")))
+        if not events:
+            return self.spark.createDataFrame([], StructType(
+                list(schema.fields)
+                + [StructField("_change_type", StringType(), False),
+                   StructField("_commit_sid", LongType(), False)]))
+        out = events[0].select(*cols)
+        for e in events[1:]:
+            out = out.unionByName(e.select(*cols))
+        return out
 
     def delete_frames(self, deletes: list[dict],
                       sid: int) -> dict[str, DataFrame]:
-        """Equality-delete entries → one union'd ``(__dk, __dsid)`` frame
-        per key column. Each key file is read under the key's type from
-        ``schema_at(sid)``: an explicit schema means planning a read
-        infers nothing, where a bare ``read.parquet(dir)`` runs one
-        schema-inference job per pending delete directory."""
+        """Equality-delete entries → ONE ``(__dk, __dsid)`` scan per key
+        column over all of its delete directories, ``__dsid`` parsed
+        from each file's ``delete-<sid>-`` directory. Key files are read
+        under the key's type from ``schema_at(sid)``: an explicit schema
+        means planning a read infers nothing, where a bare
+        ``read.parquet(dir)`` runs a schema-inference job."""
         schema = self.schema_at(sid)
-        out: dict[str, DataFrame] = {}
+        dirs: dict[str, list[str]] = {}
         for d in deletes:
-            key = d["key"]
-            one = (self.spark.read.schema(StructType([schema[key]]))
-                   .parquet(d["dir"])
-                   .select(F.col(key).alias("__dk"),
-                           F.lit(d["sid"]).alias("__dsid")))
-            out[key] = one if key not in out else \
-                out[key].unionByName(one)
-        return out
+            dirs.setdefault(d["key"], []).append(d["dir"])
+        return {key: (self.spark.read.schema(StructType([schema[key]]))
+                      .parquet(*ds)
+                      .select(F.col(key).alias("__dk"),
+                              self._path_sid().alias("__dsid")))
+                for key, ds in dirs.items()}
 
     def _groups_at(self, sid: int) -> tuple[list, list]:
         """Per-commit file provenance + pending equality deletes at
@@ -902,20 +907,18 @@ class IceliteTable:
         [{"sid": s, "dir": d, "key": k}, ...])``.
 
         Walks delta manifests like ``files_at``. A full manifest
-        terminates the walk: compacted/upsert-rewritten ones contribute
-        one group at their own commit id (their data already has every
-        older delete applied); SEALED manifests (expire_snapshots below a
-        merge-on-read commit) carry explicit ``file_groups`` + ``deletes``
-        preserving the provenance the delete predicates need."""
+        terminates the walk: compacted/delete_where-rewritten ones
+        contribute one group at their own commit id (their data already
+        has every older delete applied); SEALED manifests (expire_snapshots
+        below a merge-on-read commit) carry explicit ``file_groups`` +
+        ``deletes`` preserving the provenance the delete predicates
+        need."""
         groups: list = []
         deletes: list = []
         cur = sid
         while cur:
             m = self._manifest(cur)
             deletes.extend(m.get("deletes", []))
-            if "files" in m:  # legacy cumulative form (predates MOR)
-                groups.append((cur, m["files"]))
-                break
             if m.get("full"):
                 if "file_groups" in m:
                     groups.extend((g[0], g[1])
@@ -1029,10 +1032,14 @@ class IceliteTable:
         other bucket directories at planning time). Returns exactly the
         rows whose key hashes into those buckets.
 
-        Always ONE scan node: explicit file list (unpartitioned) or a
-        shared-basePath multi-directory scan where the ``__commit=`` level
-        parses as a synthetic partition column that is dropped after read
-        (hive partition columns and their pruning are unaffected)."""
+        Plans one scan per physical layout at any commit count: an
+        explicit file list (unpartitioned) or a shared-basePath scan
+        where the ``__commit=`` level parses as a synthetic partition
+        column that is dropped after read (hive partition columns and
+        their pruning are unaffected). Pending merge-on-read equality
+        deletes add one delete scan and one broadcast anti-join per key
+        column, matched on commit ids parsed from file paths
+        (``_scan_live``); ``compact()`` applies them physically."""
         named = [n for n in (tag, branch) if n is not None]
         if named:
             if snapshot_id is not None or len(named) > 1:
@@ -1051,42 +1058,7 @@ class IceliteTable:
             pruned = set(files)
             groups = [(csid, [f for f in gfiles if f in pruned])
                       for csid, gfiles in groups]
-        if deletes:
-            # merge-on-read path: rows carry their commit id, and pending
-            # equality-delete files anti-join away OLDER rows with a
-            # matching key (Iceberg v2 equality-delete semantics: a
-            # delete at commit s applies to data committed before s, so a
-            # same-commit re-insert survives). Delete sets are O(batch) →
-            # broadcast. r5 (VERDICT r4 #6): ALL pending delete sets
-            # coalesce into ONE union'd (key, sid) frame and ONE
-            # broadcast anti-join per distinct key column — read cost no
-            # longer grows by a join per un-compacted re-crawl commit
-            # (was O(k) anti-joins after k batches). Equivalent because
-            # LEFT ANTI removes a row iff ANY build row matches; the
-            # per-delete "older only" guard travels as the build-side
-            # ``__dsid`` in the join condition. compact() still restores
-            # the plain single-scan path.
-            parts = []
-            for csid, gfiles in groups:
-                if not gfiles:
-                    continue  # metadata-only commit (schema evolution)
-                g = self._read_file_group(gfiles, schema, buckets)
-                parts.append(g.withColumn("__csid", F.lit(csid)))
-            data = parts[0]
-            for p in parts[1:]:
-                data = data.unionByName(p)
-            for key, dk in self.delete_frames(deletes, sid).items():
-                data = data.join(
-                    F.broadcast(dk),
-                    (F.col(key) == F.col("__dk"))
-                    & (F.col("__csid") < F.col("__dsid")),
-                    "left_anti")
-            return data.drop("__csid")
-        # single-group fast path — one scan node: explicit file list
-        # (unpartitioned), shared-basePath __commit= scan (partitioned/
-        # bucketed), or the legacy pre-r3 per-directory union (compact()
-        # + expire_snapshots() migrates those back onto the fast path)
-        return self._read_file_group(files, schema, buckets)
+        return self._scan_live(files, groups, deletes, schema, sid, buckets)
 
     # -- write ----------------------------------------------------------------
     def _stage_dir(self, sid: int) -> str:
@@ -1107,10 +1079,7 @@ class IceliteTable:
         level (computed here, dropped on read).
 
         ``cluster=False`` skips the declared-sort-order clustering:
-        ``compact`` pre-clusters with an explicit target file count, and
-        ``merge_upsert`` counts via Observations that must ride exactly
-        one execution (repartitionByRange's range-bound sampling pass
-        re-executes the child, which would double-fire them)."""
+        ``compact`` pre-clusters with an explicit target file count."""
         data_dir = self._stage_dir(sid)
         if self.bucket:
             key, n = self.bucket
@@ -1386,76 +1355,17 @@ class IceliteTable:
             return sid, inserted
         raise last_err  # type: ignore[misc]
 
-    def merge_upsert(self, df: DataFrame, key: str,
-                     order_col: str | None = None) -> tuple[int, int]:
-        """Full MERGE: ``WHEN MATCHED THEN UPDATE (replace row) WHEN NOT
-        MATCHED THEN INSERT`` — the copy-on-write arm merge_on_key omits
-        (the extraction job never rewrites a url; re-crawl/backfill jobs
-        do). Copy-on-write like Iceberg's default MERGE: the new snapshot
-        rewrites the union (kept old rows ∪ all source rows) with
-        ``full: true``, so older snapshots time-travel unchanged.
-
-        Returns ``(snapshot_id, updated)`` where ``updated`` counts target
-        rows replaced by a source row. Within-batch duplicate keys resolve
-        first-wins by ``order_col`` exactly as merge_on_key.
-
-        Scale note: COW MERGE rewrites the whole table — correct but
-        O(table) per call, which is why the hot-path resume checkpoint is
-        the insert-only arm; Iceberg's merge-on-read (delete files) is the
-        10^12-row answer for frequent updates and is out of icelite's
-        scope by design.
-        """
-        from pyspark.sql import Observation
-
-        df = self._first_wins(df, key, order_col)
-        last_err: ConcurrentCommitError | None = None
-        for _ in range(3):
-            prev_total = self.row_count()
-            parent = self.snapshot_id()
-            sid = parent + 1
-            current = self.read()
-            obs_kept, obs_src = Observation(), Observation()
-            kept = (current.join(df.select(key), key, "left_anti")
-                    .observe(obs_kept, F.count(F.lit(1)).alias("n")))
-            src = (df.select(*current.columns)
-                   .observe(obs_src, F.count(F.lit(1)).alias("n")))
-            data_dir, new_files = self._stage_data(
-                kept.unionByName(src), sid, cluster=False)
-            # both observations ride the single staging job
-            n_kept, n_src = int(obs_kept.get["n"]), int(obs_src.get["n"])
-            manifest = {**self._inherited_meta(parent),
-                        "snapshot_id": sid, "parent": parent,
-                        "new_files": new_files, "full": True,
-                        "merged_upsert": True,
-                        "total_rows": n_kept + n_src,
-                        # full manifests terminate parent-chain walks once
-                        # expiry prunes below them — carry the schema so an
-                        # expired evolution commit can't revert the table
-                        "schema": self.schema_at(parent).jsonValue()}
-            if self.stat_cols:
-                manifest["file_stats"] = self._file_stats(new_files)
-            try:
-                self._commit_manifest(sid, manifest)
-            except ConcurrentCommitError as e:
-                shutil.rmtree(data_dir, ignore_errors=True)
-                last_err = e
-                continue
-            # replaced target rows = old total − survivors; −1 when the
-            # prior commit lacked a recorded total (bare append history)
-            updated = prev_total - n_kept if prev_total is not None else -1
-            return sid, updated
-        raise last_err  # type: ignore[misc]
-
     def merge_upsert_mor(self, df: DataFrame, key: str,
                          order_col: str | None = None) -> tuple[int, int]:
-        """Full MERGE as merge-on-read — the 10^12-row update arm
-        merge_upsert's copy-on-write deliberately is not: stage ONLY the
-        batch's data files plus an equality-delete key file, applied at
-        read time to rows from OLDER commits (Iceberg v2 equality-delete
-        discipline). A re-crawl batch (same url, newer ``warc_ts``)
-        touches O(batch) data, never O(table); ``compact()`` later applies
-        the deletes physically and restores the single-scan read, and
-        ``expire_snapshots`` reclaims the applied delete files.
+        """Full MERGE (``WHEN MATCHED THEN UPDATE (replace row) WHEN NOT
+        MATCHED THEN INSERT``) as merge-on-read — the 10^12-row update
+        arm: stage ONLY the batch's data files plus an equality-delete
+        key file, applied at read time to rows from OLDER commits
+        (Iceberg v2 equality-delete discipline). A re-crawl batch (same
+        url, newer ``warc_ts``) touches O(batch) data, never O(table);
+        ``compact()`` later applies the deletes physically and restores
+        the plain-scan read, and ``expire_snapshots`` reclaims the
+        applied delete files.
 
         Returns ``(snapshot_id, updated)`` where ``updated`` counts target
         rows superseded by a source row (one metadata-free scan of the
@@ -1528,10 +1438,8 @@ class IceliteTable:
                     else "compact" if m.get("compacted")
                     else "delete" if m.get("deleted_where")
                     else "delete" if m.get("deletes")
-                    and not m.get("new_files")
-                    and not m.get("merged_upsert") and not m.get("upsert_mor")
-                    else "upsert" if m.get("merged_upsert")
-                    or m.get("upsert_mor") or m.get("deletes")
+                    and not m.get("new_files") and not m.get("upsert_mor")
+                    else "upsert" if m.get("upsert_mor") or m.get("deletes")
                     else "spec" if m.get("spec_evolved_to") is not None
                     else "schema" if m.get("schema_evolved")
                     else "seal" if m.get("full")
@@ -1539,7 +1447,7 @@ class IceliteTable:
                     else "append")
             row = {"snapshot_id": cur, "parent": m.get("parent", 0),
                    "kind": kind,
-                   "n_files": len(m.get("new_files", m.get("files", [])))}
+                   "n_files": len(m["new_files"])}
             for k in ("inserted", "updated_rows", "deleted", "total_rows",
                       "extracted_watermark", "committed_at_ms"):
                 if k in m:
@@ -1917,12 +1825,12 @@ class IceliteTable:
 
     # -- maintenance ------------------------------------------------------------
     _STRUCTURAL_KEYS = frozenset({
-        "snapshot_id", "parent", "new_files", "files", "full", "schema",
+        "snapshot_id", "parent", "new_files", "full", "schema",
         "schema_evolved", "file_groups", "deletes", "sealed", "meta_only",
         "file_stats"})
     _OWN_BOOKKEEPING = frozenset({
-        "inserted", "total_rows", "compacted", "merged_upsert",
-        "upsert_mor", "committed_at_ms", "spec_evolved_to",
+        "inserted", "total_rows", "compacted", "upsert_mor",
+        "committed_at_ms", "spec_evolved_to",
         "sort_order_set", "zordered", "deleted_where", "deleted",
         "updated_rows"})
 
@@ -1946,14 +1854,17 @@ class IceliteTable:
                 if k not in self._STRUCTURAL_KEYS
                 and k not in self._OWN_BOOKKEEPING}
 
-    def commit_meta(self, extra: dict) -> int:
+    def commit_meta(self, extra: dict,
+                    expected_parent: int | None = None) -> int:
         """Metadata-only commit: advance the snapshot carrying ``extra``
         bookkeeping with NO data files and zero Spark jobs — e.g. the
         incremental WET exporter advancing its watermark past a delta
         whose rows were all already shipped (r5 VERDICT #4: without this
         the fully-covered delta is re-read and re-anti-joined on every
-        subsequent run)."""
-        parent = self.snapshot_id()
+        subsequent run). ``expected_parent``: the same compare-and-swap
+        arm as ``append``."""
+        parent = (self.snapshot_id() if expected_parent is None
+                  else expected_parent)
         sid = parent + 1
         manifest = {**self._inherited_meta(parent),
                     "snapshot_id": sid, "parent": parent,
@@ -2070,11 +1981,11 @@ class IceliteTable:
         if not deleted:
             shutil.rmtree(data_dir, ignore_errors=True)
             return parent, 0
-        manifest = {"snapshot_id": sid, "parent": parent,
+        manifest = {**self._inherited_meta(parent),
+                    "snapshot_id": sid, "parent": parent,
                     "new_files": kept + files, "full": True,
                     "deleted_where": True, "deleted": deleted,
-                    "schema": schema.jsonValue(),
-                    **self._carry_extra_meta(parent)}
+                    "schema": schema.jsonValue()}
         if self.stat_cols:
             old_stats = self._stats_at(parent)
             manifest["file_stats"] = {
@@ -2089,29 +2000,6 @@ class IceliteTable:
             shutil.rmtree(data_dir, ignore_errors=True)
             raise
         return sid, deleted
-
-    def _carry_extra_meta(self, from_sid: int) -> dict:
-        """The LATEST value of every caller ``extra_meta`` key reachable
-        from ``from_sid`` (newest wins). Full-history rewrites (compact,
-        the expire seal) call this so bookkeeping that "rides the commit
-        atomically" — e.g. the incremental-curation watermark — survives
-        maintenance instead of silently vanishing with the rewritten
-        parents. Per-commit counters and kind markers never travel (they
-        would relabel the rewrite)."""
-        carried: dict = {}
-        cur = from_sid
-        while cur:
-            try:
-                m = self._manifest(cur)
-            except FileNotFoundError:
-                break
-            for k, v in m.items():
-                if k not in self._STRUCTURAL_KEYS \
-                        and k not in self._OWN_BOOKKEEPING \
-                        and k not in carried:
-                    carried[k] = v
-            cur = m.get("parent", 0)
-        return carried
 
     @staticmethod
     def _zvalue(scaled: list, bits: int = 16):
@@ -2214,14 +2102,16 @@ class IceliteTable:
         else:
             staged = current.repartition(target_partitions)
         data_dir, files = self._stage_data(staged, sid, cluster=False)
-        manifest = {"snapshot_id": sid, "parent": parent,
+        # caller bookkeeping (e.g. curation watermark) survives the
+        # full-history rewrite
+        manifest = {**self._inherited_meta(parent),
+                    "snapshot_id": sid, "parent": parent,
                     "new_files": files, "full": True, "compacted": True,
                     **({"zordered": list(zorder)} if zorder else {}),
-                    # see merge_upsert: full manifests must carry the schema
-                    "schema": self.schema_at(parent).jsonValue(),
-                    # caller bookkeeping (e.g. curation watermark)
-                    # survives the full-history rewrite
-                    **self._carry_extra_meta(parent)}
+                    # full manifests terminate parent-chain walks once
+                    # expiry prunes below them — carry the schema so an
+                    # expired evolution commit can't revert the table
+                    "schema": self.schema_at(parent).jsonValue()}
         if self.stat_cols:
             manifest["file_stats"] = self._file_stats(files)
         total = self.row_count()
@@ -2305,12 +2195,12 @@ class IceliteTable:
         m = self._manifest(oldest_keep)
         keep_groups, keep_deletes = self._groups_at(oldest_keep)
         # seal when the manifest is a delta (needs the resolved file list)
-        # OR lacks a schema (an already-full legacy/compacted manifest whose
-        # schema still lives in an about-to-expire parent) OR sits above
-        # un-compacted merge-on-read commits (the delete predicates need
-        # per-commit provenance): either way the oldest retained manifest
-        # must be self-contained after expiry
-        if (("files" not in m and not m.get("full")) or "schema" not in m
+        # OR lacks a schema (an already-full manifest whose schema still
+        # lives in an about-to-expire parent) OR sits above un-compacted
+        # merge-on-read commits (the delete predicates need per-commit
+        # provenance): either way the oldest retained manifest must be
+        # self-contained after expiry
+        if (not m.get("full") or "schema" not in m
                 or (keep_deletes and "file_groups" not in m)):
             kept_entries = self.files_at(oldest_keep)
             kept_stats = {k: v
@@ -2333,17 +2223,14 @@ class IceliteTable:
                 # groups + the still-pending delete entries
                 sealed["file_groups"] = [[s, fs] for s, fs in keep_groups]
                 sealed["deletes"] = keep_deletes
-            # the sealed manifest keeps its OWN counters/kind markers,
-            # and caller extra_meta (e.g. the incremental-curation
-            # watermark: "rides the commit atomically" must survive
-            # maintenance, r5 review) is pulled from the whole expiring
-            # chain — newest value wins, counters of OTHER commits never
-            # travel (they would relabel the seal)
+            # the sealed manifest keeps its OWN counters/kind markers and
+            # caller extra_meta (e.g. the incremental-curation watermark:
+            # "rides the commit atomically" must survive maintenance) —
+            # the manifest already holds the newest value of every
+            # extra_meta key, each commit having inherited its parent's
             for k, v in m.items():
-                if k in self._OWN_BOOKKEEPING:
+                if k not in self._STRUCTURAL_KEYS:
                     sealed[k] = v
-            for k, v in self._carry_extra_meta(oldest_keep).items():
-                sealed.setdefault(k, v)
             fd, tmp = tempfile.mkstemp(
                 dir=os.path.join(self.root, "_icelite"))
             with os.fdopen(fd, "w") as f:
@@ -2357,10 +2244,10 @@ class IceliteTable:
             if not os.path.exists(mpath):
                 continue
             old = self._manifest(sid)
-            delta = old["files"] if "files" in old else old["new_files"]
             # delete files introduced by expired MOR commits go too (unless
             # a retained snapshot still applies them — keep_files has those)
-            delta = list(delta) + [d["dir"] for d in old.get("deletes", [])]
+            delta = old["new_files"] + [d["dir"]
+                                        for d in old.get("deletes", [])]
             for f in delta:
                 if f not in keep_files and os.path.exists(f):
                     if os.path.isdir(f):
@@ -2391,8 +2278,7 @@ class IceliteTable:
             except FileNotFoundError:
                 # manifest whose parent chain was expired (itself an
                 # orphan): keep ITS OWN files conservatively
-                m = self._manifest(sid)
-                entries = m["files"] if "files" in m else m["new_files"]
+                entries = self._manifest(sid)["new_files"]
             entries = list(entries) + [
                 d["dir"]
                 for d in self._manifest(sid).get("deletes", [])]

@@ -127,11 +127,11 @@ def test_lifecycle_fuzz_bucket_layout(spark, tmp_path):
 
 def test_lifecycle_fuzz_sorted_stats_deletes(spark, tmp_path):
     """Op-interleaving fuzz over a table with declared stat columns AND
-    write sort order, widened with equality-delete-only and
-    metadata-only commits (r6): after every step the content matches
-    the model, a random ts-range prune + filter returns exactly the
-    model's matching rows, and every committed file stays internally
-    ts-ordered."""
+    write sort order, widened with equality-delete-only, copy-on-write
+    delete_where and metadata-only commits: after every step the
+    content matches the model, a random ts-range prune + filter returns
+    exactly the model's matching rows, and every committed file stays
+    internally ts-ordered."""
     from datetime import datetime
 
     import pyarrow.parquet as pq
@@ -157,7 +157,7 @@ def test_lifecycle_fuzz_sorted_stats_deletes(spark, tmp_path):
 
         for step in range(12):
             op = rng.choice(["merge", "merge", "mor", "mor", "delete",
-                             "compact", "expire", "meta"])
+                             "delwhere", "compact", "expire", "meta"])
             day = min(day + 1, 28)
             lo = rng.randrange(0, 50)
             ks = list(range(lo, lo + rng.randrange(1, 15)))
@@ -185,6 +185,22 @@ def test_lifecycle_fuzz_sorted_stats_deletes(spark, tmp_path):
                 for u in urls:
                     model.pop(u, None)
                     model_day.pop(u, None)
+            elif op == "delwhere":
+                # the files delete_where carries into its full manifest
+                # keep their older commit directories: the one case where
+                # a group's commit id and its files' directory ids differ
+                d1 = rng.randrange(1, day + 1)
+                lo_ts = datetime(2025, 7, d1)
+                hi_ts = datetime(2025, 7, d1, 23, 59, 59)
+                pred = F.col("warc_ts").between(F.lit(lo_ts), F.lit(hi_ts))
+                try:
+                    t.delete_where(pred, prune={"warc_ts": (lo_ts, hi_ts)})
+                except ValueError:  # pending MOR deletes: compact first
+                    t.compact(target_partitions=rng.choice([1, 2, 4]))
+                    t.delete_where(pred, prune={"warc_ts": (lo_ts, hi_ts)})
+                for u in [u for u, d in model_day.items() if d == d1]:
+                    model.pop(u)
+                    model_day.pop(u)
             elif op == "compact":
                 t.compact(target_partitions=rng.choice([1, 2, 4]))
             elif op == "expire":

@@ -80,9 +80,11 @@ def test_crash_before_head_swing_is_invisible(spark, tmp_path):
     t = extracted_table(spark, root)
     n_before = t.read().count()
     # simulate a crash: orphan data directory + manifest, HEAD not swung
-    os.makedirs(os.path.join(t.root, "data", "commit-99"), exist_ok=True)
+    os.makedirs(os.path.join(t.root, "data", "commit-99-0badf00d"),
+                exist_ok=True)
     with open(os.path.join(t.root, "_icelite", "commits", "99.json"), "w") as f:
-        f.write('{"snapshot_id": 99, "parent": 1, "files": ["/nonexistent"]}')
+        f.write('{"snapshot_id": 99, "parent": 1, '
+                '"new_files": ["/nonexistent"]}')
     assert t.read().count() == n_before
 
 
@@ -98,7 +100,7 @@ def test_concurrent_commit_detected(spark, tmp_path):
     t = extracted_table(spark, root)
     # simulate a winner: snapshot 2's manifest already exists
     with open(os.path.join(t.root, "_icelite", "commits", "2.json"), "w") as f:
-        f.write('{"snapshot_id": 2, "parent": 1, "files": []}')
+        f.write('{"snapshot_id": 2, "parent": 1, "new_files": []}')
     df = t.read().limit(1)
     with pytest.raises(ConcurrentCommitError):
         t.append(df)
@@ -116,10 +118,9 @@ def test_merge_retries_from_new_head(spark, tmp_path):
     run_extraction(spark, _pages(spark, 0, 100), root, committed_at=TS)
     t = extracted_table(spark, root)
     # simulate a racing winner who committed snapshot 2 AND swung HEAD
-    # (re-committing the same files — legacy cumulative manifest form,
-    # which files_at() must still resolve: a no-op data-wise)
+    # (an empty delta manifest: a no-op data-wise)
     with open(os.path.join(t.root, "_icelite", "commits", "2.json"), "w") as f:
-        _json.dump({"snapshot_id": 2, "parent": 1, "files": t.files_at(1)}, f)
+        _json.dump({"snapshot_id": 2, "parent": 1, "new_files": []}, f)
     with open(os.path.join(t.root, "_icelite", "HEAD"), "w") as f:
         f.write("2")
     # merging rows 0..200: first attempt computes sid=3 fine — force the
@@ -215,41 +216,6 @@ def test_concurrent_merges_from_threads(spark, tmp_path):
     full = t.read()
     assert full.count() == 98 * 3
     assert full.select("url").distinct().count() == 98 * 3
-
-
-def test_merge_upsert_replaces_matched_rows(spark, tmp_path):
-    """Copy-on-write MERGE with the matched-UPDATE arm: matched keys get
-    the source row, unmatched keys insert, untouched rows survive, and
-    older snapshots time-travel unchanged."""
-    root = str(tmp_path / "upsert")
-    run_extraction(spark, _pages(spark, 0, 100), root, committed_at=TS)
-    t = extracted_table(spark, root)
-    before = {r["url"]: r["text"] for r in t.read().collect()}
-    assert len(before) == 98
-
-    from sanskrit_ocr_spark.extract.pipeline import extract_pages
-
-    # re-crawl analog: 50 overlapping urls with MUTATED text + 100 new
-    overlap = extract_pages(_pages(spark, 0, 50)) \
-        .withColumn("text", F.concat(F.col("text"), F.lit(" v2")))
-    fresh = extract_pages(_pages(spark, 100, 200))
-    src = overlap.unionByName(fresh)
-
-    sid, updated = t.merge_upsert(src, "url", order_col="warc_ts")
-    after = {r["url"]: r["text"] for r in t.read().collect()}
-
-    overlap_urls = {r["url"] for r in overlap.select("url").collect()}
-    assert updated == len(overlap_urls)
-    # matched rows replaced
-    assert all(after[u].endswith(" v2") for u in overlap_urls)
-    # unmatched old rows untouched, new rows inserted, no duplicates
-    untouched = set(before) - overlap_urls
-    assert all(after[u] == before[u] for u in untouched)
-    # 98 old urls (50ish replaced in place) + 98 new urls from block 100-200
-    assert len(after) == t.row_count() == len(before) + 98
-    # time travel: the pre-merge snapshot still shows the old text
-    old = {r["url"]: r["text"] for r in t.read(snapshot_id=sid - 1).collect()}
-    assert old == before
 
 
 def test_merge_prefilter_is_exact(spark, tmp_path):

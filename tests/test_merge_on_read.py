@@ -321,6 +321,36 @@ def test_mor_read_tax_bounded_after_many_commits(spark, tmp_path):
     assert {r["url"]: r["text"] for r in t.read().collect()} == rows
 
 
+def test_reads_plan_one_scan_per_layout_at_50_mor_commits(spark, tmp_path):
+    """Plan width does not grow with uncompacted commits: at 50
+    merge-on-read commits ``read`` and ``read_changes`` plan ONE data
+    scan plus ONE delete scan (one key column) and no Union — each row's
+    commit id comes from its file path, not from one literal-tagged scan
+    per commit. ``read_changelog`` plans one scan per side (inserts,
+    delete pre-images, delete keys) and one Union, the insert/delete
+    event union."""
+    t = _table(spark, tmp_path, "wide")
+    t.append(_batch(spark, 0, 60, "v0"))
+    for k in range(50):
+        t.merge_upsert_mor(_batch(spark, k, k + 3, f"v{k + 1}", day=2),
+                           "url")
+
+    def width(df):
+        plan = _plan(df)
+        return (len(re.findall(r"\(\d+\) Scan parquet", plan)),
+                len(re.findall(r"\(\d+\) Union", plan)))
+
+    cur = t.read()
+    assert width(cur) == (2, 0)
+    assert width(t.read_changes(1)) == (2, 0)
+    assert width(t.read_changelog(0)) == (3, 1)
+    rows = {r["url"]: r["text"] for r in cur.collect()}
+    assert len(rows) == 60
+    assert rows["https://ex.org/0"] == "v1-0"
+    assert rows["https://ex.org/30"] == "v31-30"
+    assert rows["https://ex.org/59"] == "v0-59"
+
+
 def test_recrawl_summary_omits_unknown_inserted(spark, tmp_path):
     """r5 ADVICE (low): when manifest row totals are unavailable (table
     written by plain append, outside merge_on_key), the recrawl summary

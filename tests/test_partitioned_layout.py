@@ -114,61 +114,6 @@ def test_many_commits_single_scan_and_delta_manifests(spark, tmp_path):
     assert t.read(snapshot_id=3).count() == 75
 
 
-def test_legacy_partitioned_layout_read_and_migration(spark, tmp_path):
-    """r3 ADVICE (low): partitioned tables written before the shared-
-    basePath layout used plain ``data/commit-<n>`` directory names. read()
-    must fall back to the per-directory union for them, appends must keep
-    working (mixed naming), and compact()+expire() must migrate the table
-    back onto the single-scan fast path."""
-    import json
-    import os
-    import re
-    import shutil
-
-    t = IceliteTable(spark, str(tmp_path / "legacy"), LAYOUT_SCHEMA,
-                     partition_cols=["warc_day", "bucket"])
-    t.append(_layout_df(spark, 0, 100))
-    t.append(_layout_df(spark, 100, 200))
-
-    # rewrite history into the legacy on-disk form: rename each commit dir
-    # to commit-<n> and point the manifests (legacy cumulative `files`
-    # form) at the renamed paths
-    data = os.path.join(t.root, "data")
-    renames = {}
-    for name in sorted(os.listdir(data)):
-        if name.startswith("__commit="):
-            legacy = "commit-" + name.split("=", 1)[1].split("-")[0]
-            shutil.move(os.path.join(data, name), os.path.join(data, legacy))
-            renames[os.path.join(data, name)] = os.path.join(data, legacy)
-    cdir = os.path.join(t.root, "_icelite", "commits")
-    for mname in os.listdir(cdir):
-        with open(os.path.join(cdir, mname)) as f:
-            m = json.load(f)
-        m["new_files"] = [renames.get(p, p) for p in m.get("new_files", [])]
-        with open(os.path.join(cdir, mname), "w") as f:
-            json.dump(m, f)
-
-    # fresh handle (no memoized file lists): legacy layout reads correctly
-    t2 = IceliteTable(spark, t.root, LAYOUT_SCHEMA,
-                      partition_cols=["warc_day", "bucket"])
-    assert t2.read().count() == 200
-    assert t2.read().filter(F.col("bucket") == 3).count() > 0
-
-    # appending produces a mixed referenced set — still readable
-    t2.append(_layout_df(spark, 200, 300))
-    assert t2.read().count() == 300
-
-    # migration: compact rewrites everything into one __commit= dir;
-    # after expiry the fast single-scan path re-engages
-    t2.compact(target_partitions=2)
-    t2.expire_snapshots(keep_last=1)
-    full = t2.read()
-    assert full.count() == 300
-    plan = _plan(full)
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-    assert "Union" not in plan
-
-
 def test_icelite_reads_push_filters_to_parquet(spark, tmp_path):
     """Predicate pushdown survives every icelite read path: data-column
     filters reach the parquet scan (PushedFilters) on unpartitioned,
@@ -212,14 +157,9 @@ def test_icelite_reads_push_filters_to_parquet(spark, tmp_path):
 
 
 def test_stored_partition_cols_detects_every_layout(spark, tmp_path):
-    """r5 ADVICE (low): the --maintain layout guard must also catch
-    LEGACY partitioned tables (plain commit-<n> dirs, hive key dirs
-    nested inside) — via the persisted partition spec when present, via
-    the in-dir probe when not."""
-    import json
-    import os
-    import shutil
-
+    """The --maintain layout guard reads the persisted partition spec; a
+    table without one is unpartitioned once it holds data, and
+    indeterminate while empty."""
     # modern partitioned table: spec file written at creation
     t = IceliteTable(spark, str(tmp_path / "modern"), LAYOUT_SCHEMA,
                      partition_cols=["warc_day", "bucket"])
@@ -231,21 +171,6 @@ def test_stored_partition_cols_detects_every_layout(spark, tmp_path):
     u = IceliteTable(spark, str(tmp_path / "flat"), LAYOUT_SCHEMA)
     u.append(_layout_df(spark, 0, 10))
     assert IceliteTable.stored_partition_cols(u.root) == []
-
-    # legacy partitioned table: no spec file, commit-<n> naming — the
-    # probe must find the hive key dirs INSIDE the commit dir
-    leg = IceliteTable(spark, str(tmp_path / "leg"), LAYOUT_SCHEMA,
-                       partition_cols=["warc_day", "bucket"])
-    leg.append(_layout_df(spark, 0, 50))
-    data = os.path.join(leg.root, "data")
-    for name in sorted(os.listdir(data)):
-        if name.startswith("__commit="):
-            legacy = "commit-" + name.split("=", 1)[1].split("-")[0]
-            shutil.move(os.path.join(data, name),
-                        os.path.join(data, legacy))
-    os.remove(os.path.join(leg.root, "_icelite", "partition_spec.json"))
-    got = IceliteTable.stored_partition_cols(leg.root)
-    assert got and got[0] == "warc_day"
 
     # empty table, no spec: indeterminate
     e = IceliteTable(spark, str(tmp_path / "empty"), LAYOUT_SCHEMA)

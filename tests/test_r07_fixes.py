@@ -127,6 +127,39 @@ def test_evolve_spec_restores_file_on_lost_commit_race(spark, tmp_path):
         assert json.load(f)["partition_cols"] == ["k"]
 
 
+def test_evolve_spec_marker_lands_at_its_intended_sid(spark, tmp_path):
+    """A second handle committing between the spec-file write and the
+    marker commit must not be attributed to the new spec: the marker
+    commits AT the sid the spec history names, so the interloper makes
+    it fail, and the previous spec (here: none) comes back."""
+    root = str(tmp_path / "t")
+    t = IceliteTable(spark, root, SCHEMA)
+    t.append(_df(spark, [("a", 1)]))
+    other = IceliteTable(spark, root, SCHEMA)
+    spec_path = os.path.join(root, "_icelite", "partition_spec.json")
+    marker = t.commit_meta
+
+    def interloped(extra, **kw):
+        assert os.path.exists(spec_path)  # the spec file is already out
+        other.commit_meta({"interloper": True})
+        return marker(extra, **kw)
+
+    t.commit_meta = interloped
+    with pytest.raises(ConcurrentCommitError):
+        t.evolve_partition_spec(["k"])
+    assert not os.path.exists(spec_path)
+    assert t.snapshot_id() == 2 and t.history()[0]["kind"] == "meta"
+    assert t.partition_cols == []
+
+    # retried without interference: spec history names the marker's sid
+    del t.commit_meta
+    sid = t.evolve_partition_spec(["k"])
+    with open(spec_path) as f:
+        assert json.load(f)["history"][-1] == {"cols": ["k"],
+                                               "from_sid": sid}
+    assert t.history()[0]["kind"] == "spec"
+
+
 def test_expire_older_than_naive_is_utc(spark, tmp_path):
     """A naive ``older_than`` is interpreted as UTC against the UTC
     ``committed_at_ms``, regardless of process-local timezone."""
