@@ -23,6 +23,13 @@ that finishing stage over the ``extracted`` table, Spark-first:
 Everything is one narrow filter + one partial-aggregated dedup shuffle +
 writes; the stats come from an ``observe`` on the write pass, not extra
 count jobs.
+
+``curate_table`` is the incremental form over an icelite corpus table:
+each run curates only the extracted rows added since its watermark and
+lands retraction deletes, fresh texts and the new watermark as ONE
+row-delta corpus commit (``merge_on_key(retract=...)``), its counts read
+from the staged files' parquet footers — no emptiness probe and no count
+job unless the run staged nothing.
 """
 
 from __future__ import annotations
@@ -41,7 +48,9 @@ def curate_gates(extracted: DataFrame,
     — split out so callers can probe batch emptiness WITHOUT paying the
     dedup shuffle: the keep_first below never empties a non-empty input,
     so ``curate(df).isEmpty() == curate_gates(df).isEmpty()`` and the
-    gate-only probe is a limit-1 scan."""
+    gate-only probe is a limit-1 scan. ``curate_table`` runs that probe
+    only after a commit attempt staged nothing, to tell an all-duplicate
+    delta (watermark advances) from an empty one (no commit)."""
     return (extracted
             .filter(F.col("status") == "OK")
             .filter(F.col("n_graphemes") >= min_graphemes)
@@ -128,8 +137,10 @@ def curate_table(spark, corpus_root: str, extracted,
        ``--recrawl`` / ``start_ingest(recrawl=True)``), committed
        corpus rows attributed to a replaced url whose content hash is
        NOT re-asserted by that url's latest in-range extraction are
-       deleted (``IceliteTable.delete_keys`` — an O(batch) equality-
-       delete commit, replay-idempotent). Contract: **the corpus
+       deleted — their keys, derived against the commit's parent
+       snapshot, become the O(batch) equality-delete file of the step-4
+       commit (replay-idempotent: a replayed retraction finds the keys
+       already gone). Contract: **the corpus
        mirrors the latest crawl state per url** — without this, a
        recrawled url's old text stayed in the corpus forever while the
        new text was appended (a silent content log). Documented
@@ -138,7 +149,9 @@ def curate_table(spark, corpus_root: str, extracted,
        url leaves the corpus until any later delta re-presents it —
        the only O(delta) alternative to per-text reference counts;
        the content-hash MERGE re-inserts it the next time any crawl
-       batch carries it. ``retract=False`` pins the r5 content-log
+       batch carries it — in the same commit when the retracting delta
+       itself carries it (a delete at ``s`` removes only rows committed
+       before ``s``). ``retract=False`` pins the r5 content-log
        semantics (texts are only ever added);
     3. run the normal ``curate`` gates + within-batch first-wins dedup
        on just that delta;
@@ -146,12 +159,18 @@ def curate_table(spark, corpus_root: str, extracted,
        hash (``text_md5``) — committed rows win, which IS the
        reference's stream-order first-wins dedup rule
        (h5_to_parquet.py:45-48) applied across batches in arrival
-       order; re-running with no new commits inserts nothing;
-    5. the extraction snapshot watermark rides the corpus commit's
-       manifest atomically (``extra_meta``), so a crash between steps
-       never loses or double-counts a delta — at-least-once re-curation
-       of a batch is made idempotent by the MERGE, and a replayed
-       retraction deletes nothing (keys already gone).
+       order; re-running with no new commits inserts nothing. Step 2's
+       deletes and the fresh rows land as ONE corpus commit
+       (``merge_on_key(retract=...)``, Iceberg's ``RowDelta``), both
+       counts read from the staged parquet footers; a lost commit race
+       re-derives both against the new parent;
+    5. the extraction snapshot watermark rides that same commit's
+       manifest atomically (``extra_meta``), so a crash never loses or
+       double-counts a delta — at-least-once re-curation of a batch is
+       made idempotent by the MERGE, and a replayed retraction deletes
+       nothing (keys already gone). A run that staged nothing commits
+       nothing, except that an all-duplicate delta advances the
+       watermark on a metadata-only commit.
 
     Returns ``{corpus_snapshot, inserted, retracted, watermark,
     corpus_total}``.
@@ -200,74 +219,77 @@ def curate_table(spark, corpus_root: str, extracted,
     # retraction: corpus rows superseded by in-range re-crawls (step 2
     # of the docstring). Scale shape: the replaced-url set is O(recrawl
     # batch) → broadcast; the corpus side is one narrow (url, text_md5)
-    # scan semi-joined map-side; the delete commit is O(stale rows).
-    stale = None
-    if retract and corpus.snapshot_id():
-        if full_fallback:
-            # provenance gone: full repair against the CURRENT table
-            # state (the fallback read already applies MOR deletes) —
-            # any corpus pair no longer present was superseded
-            current = delta.select(
-                "url", F.md5(F.encode("text", "UTF-8")).alias("text_md5"))
-            stale = (corpus.read().select("url", "text_md5")
-                     .join(current, ["url", "text_md5"], "left_anti"))
-        else:
-            dels = [d for d in extracted.deletes_in_range(wm, head)
-                    if d["key"] == "url"]
-            if dels:
-                replaced = (extracted.delete_frames(dels, head)["url"]
-                            .select(F.col("__dk").alias("url"))
-                            .distinct())
-                # each replaced url's latest in-range version (the NET
-                # delta holds at most one row per replaced url; the
-                # keep_first is a determinism guard for exact-ts ties)
-                latest = keep_first(
-                    delta.join(F.broadcast(replaced), "url", "left_semi")
-                    .select("url", "warc_ts",
-                            F.md5(F.encode("text", "UTF-8"))
-                            .alias("text_md5")),
-                    "url", [(-F.col("warc_ts").cast("long")), "text_md5"])
-                stale = (corpus.read().select("url", "text_md5")
-                         .join(F.broadcast(replaced), "url", "left_semi")
-                         .join(latest.select("url", "text_md5"),
-                               ["url", "text_md5"], "left_anti"))
-    retracted = 0
-    if stale is not None and not stale.isEmpty():
-        _, retracted = corpus.delete_keys(
-            stale.select("text_md5"), "text_md5")
+    # scan semi-joined map-side; the staged delete file is O(stale rows).
+    # Everything extracted-side is planned once here; the corpus side
+    # is derived per merge attempt, at that attempt's parent snapshot
+    superseded = None
+    if retract and sid and full_fallback:
+        # provenance gone: full repair against the CURRENT table state
+        # (the fallback read already applies MOR deletes) — any corpus
+        # pair no longer present was superseded
+        current = delta.select(
+            "url", F.md5(F.encode("text", "UTF-8")).alias("text_md5"))
+
+        def superseded(live):
+            return live.join(current, ["url", "text_md5"], "left_anti")
+    elif retract and sid:
+        dels = [d for d in extracted.deletes_in_range(wm, head)
+                if d["key"] == "url"]
+        if dels:
+            replaced = (extracted.delete_frames(dels, head)["url"]
+                        .select(F.col("__dk").alias("url"))
+                        .distinct())
+            # each replaced url's latest in-range version (the NET delta
+            # holds at most one row per replaced url; the keep_first is
+            # a determinism guard for exact-ts ties)
+            latest = keep_first(
+                delta.join(F.broadcast(replaced), "url", "left_semi")
+                .select("url", "warc_ts",
+                        F.md5(F.encode("text", "UTF-8")).alias("text_md5")),
+                "url", [(-F.col("warc_ts").cast("long")), "text_md5"])
+
+            def superseded(live):
+                return (live.join(F.broadcast(replaced), "url", "left_semi")
+                        .join(latest.select("url", "text_md5"),
+                              ["url", "text_md5"], "left_anti"))
+
+    def stale_keys(parent):
+        # live corpus rows at ``parent`` only: each staged key then
+        # deletes exactly one row (text_md5 is unique among live rows),
+        # which is what lets merge_on_key count deletes from footers
+        if superseded is None:
+            return None
+        return superseded(corpus.read(parent).select("url", "text_md5"))
 
     gated = curate_gates(delta, min_graphemes=min_graphemes)
     batch = keep_first(gated, "text", ["warc_ts", "url"]).select(
         F.md5(F.encode("text", "UTF-8")).alias("text_md5"),
         "url", "warc_ts", "text", "n_graphemes", "n_sentences")
-    # emptiness probed on the NARROW gate stage (r7): keep_first never
-    # empties a non-empty input, so this is equivalent to batch.isEmpty()
-    # — but it early-exits as a limit-1 scan instead of running the full
-    # dedup shuffle once for the probe and AGAIN for the merge below
-    if gated.isEmpty():
-        if retracted:
-            # retraction was this run's only data change: advance the
-            # watermark on a metadata-only commit so the processed
-            # delete range is never re-read (crash before this commit
-            # merely replays an idempotent no-op retraction)
-            new_sid = corpus.commit_meta({"extracted_watermark": head})
-            return {"corpus_snapshot": new_sid, "inserted": 0,
-                    "retracted": retracted, "watermark": head,
-                    "corpus_total": corpus.row_count() or 0}
-        # nothing curated out of the delta (e.g. only no-insert resume
-        # commits since the watermark): skip the snapshot churn — the
-        # watermark intentionally does NOT advance, and the next real
-        # delta re-covers these empty commits for free
-        return {"corpus_snapshot": corpus.snapshot_id(), "inserted": 0,
-                "retracted": 0, "watermark": wm,
-                "corpus_total": corpus.row_count() or 0}
-    # ``prefilter_buckets``: the same 10^12-row MERGE shuffle guard as
-    # the extraction table (merge_on_key docstring) — at web scale the
-    # corpus' committed text_md5 column outgrows the per-batch key set
-    new_sid, inserted = corpus.merge_on_key(
+    # ONE row-delta commit: retraction deletes, fresh texts and the
+    # watermark land in the same corpus snapshot. ``prefilter_buckets``:
+    # the same 10^12-row MERGE shuffle guard as the extraction table
+    # (merge_on_key docstring) — at web scale the corpus' committed
+    # text_md5 column outgrows the per-batch key set
+    new_sid, inserted, retracted = corpus.merge_on_key(
         batch, "text_md5", order_col="warc_ts",
         prefilter_buckets=prefilter_buckets,
-        extra_meta={"extracted_watermark": head})
+        extra_meta={"extracted_watermark": head}, retract=stale_keys)
+    if not (inserted or retracted):
+        # nothing staged: the only run that probes. keep_first never
+        # empties a non-empty input, so the narrow gate stage answers
+        # "did the delta curate to anything" as a limit-1 scan
+        if gated.isEmpty():
+            # nothing curated out of the delta (e.g. only no-insert
+            # resume commits since the watermark): skip the snapshot
+            # churn — the watermark intentionally does NOT advance, and
+            # the next real delta re-covers these empty commits for free
+            return {"corpus_snapshot": new_sid, "inserted": 0,
+                    "retracted": 0, "watermark": wm,
+                    "corpus_total": corpus.row_count() or 0}
+        # every curated text is already in the corpus: advance the
+        # watermark on a metadata-only commit so the delta is never
+        # re-read
+        new_sid = corpus.commit_meta({"extracted_watermark": head})
     return {"corpus_snapshot": new_sid, "inserted": inserted,
             "retracted": retracted, "watermark": head,
             "corpus_total": corpus.row_count() or 0}

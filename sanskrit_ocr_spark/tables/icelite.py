@@ -1120,27 +1120,27 @@ class IceliteTable:
             os.path.join(data_dir, f)
             for f in os.listdir(data_dir) if f.endswith(".parquet"))
 
-    def append(self, df: DataFrame, meta=None,
-               expected_parent: int | None = None) -> int:
+    def _stage_delete(self, keys: DataFrame, sid: int) -> tuple[str, int]:
+        """Write the equality-delete key frame ``keys`` into a fresh
+        ``delete-<sid>-<token>`` directory (invisible until a manifest
+        names it; ``_PATH_SID`` parses ``sid`` back as each key's
+        ``__dsid``). Returns ``(dir, rows)``, ``rows`` from the staged
+        parquet footers (zero Spark jobs beyond the write)."""
+        del_dir = os.path.join(self.root, "data",
+                               f"delete-{sid}-{uuid.uuid4().hex[:8]}")
+        try:
+            keys.write.mode("error").parquet(del_dir)
+        except BaseException:
+            shutil.rmtree(del_dir, ignore_errors=True)
+            raise
+        return del_dir, self._staged_row_count([del_dir])
+
+    def append(self, df: DataFrame) -> int:
         """Atomically append ``df``; returns the new snapshot id. On a lost
         commit race the staged files are removed and
         ``ConcurrentCommitError`` propagates — the winner's files were
-        never shared, so nothing is clobbered either way.
-
-        ``meta``: optional callable evaluated AFTER the staging write job
-        with the staged manifest entries as its argument; its dict is
-        merged into the manifest — how merge_on_key records per-commit
-        row counts (footer-derived) without a second pass.
-
-        ``expected_parent``: commit AT this snapshot instead of re-reading
-        HEAD — the compare-and-swap arm for callers whose ``df`` was
-        derived from a specific snapshot (merge_on_key's anti-join). If
-        HEAD moved past it, the exclusive manifest create for
-        ``expected_parent + 1`` fails with ``ConcurrentCommitError``
-        instead of silently committing a frame derived from a stale
-        snapshot."""
-        parent = (self.snapshot_id() if expected_parent is None
-                  else expected_parent)
+        never shared, so nothing is clobbered either way."""
+        parent = self.snapshot_id()
         sid = parent + 1
         data_dir, new_files = self._stage_data(df, sid)
         manifest = {**self._inherited_meta(parent),
@@ -1148,8 +1148,6 @@ class IceliteTable:
                     "new_files": new_files}
         if self.stat_cols:
             manifest["file_stats"] = self._file_stats(new_files)
-        if meta is not None:
-            manifest.update(meta(new_files))
         try:
             self._commit_manifest(sid, manifest)
         except ConcurrentCommitError:
@@ -1237,8 +1235,8 @@ class IceliteTable:
                      prefilter_buckets: int | None = None,
                      extra_meta: dict | None = None,
                      bucket_ids: list[int] | None = None,
-                     presieved_at: int | None = None
-                     ) -> tuple[int, int]:
+                     presieved_at: int | None = None,
+                     retract=None) -> tuple:
         """``MERGE INTO t USING df ON t.key = df.key WHEN NOT MATCHED THEN
         INSERT`` — the idempotent-resume checkpoint (north_rule; SURVEY.md J3).
 
@@ -1279,16 +1277,34 @@ class IceliteTable:
         anti-join, so the certificate is only ever used for the exact
         snapshot it was issued against.
 
+        ``retract`` makes the merge a row delta (Iceberg v2 ``RowDelta``):
+        a function of the captured parent snapshot id returning a frame
+        holding the ``key`` of LIVE rows at that snapshot to delete in
+        the same commit (or None: nothing to delete). The keys are
+        staged as the commit's ``delete-<sid>-`` equality-delete file
+        and the batch is anti-joined against the parent's keys MINUS
+        the staged ones — a delete at ``s`` removes only rows committed
+        before ``s``, so a retracted key the batch re-presents is
+        re-inserted and survives. ``deleted`` is the staged key file's
+        footer row count, exact only because the caller certifies every
+        key names exactly one live row (unique keys, e.g. a corpus that
+        only ever merges absent keys); ``delete_keys`` counts matches
+        for callers that cannot. One manifest carries the new files,
+        the deletes, both counts, ``extra_meta`` and ``total_rows =
+        parent_total - deleted + inserted``. Returns ``(sid, inserted,
+        deleted)``; when nothing was staged, nothing is committed and
+        ``sid`` is the captured parent.
+
         Concurrency: on ``ConcurrentCommitError`` the merge retries from
-        the NEW committed HEAD — the anti-join is re-derived against the
-        winner's snapshot, so retried merges stay idempotent per key
-        (Iceberg's MERGE retry semantics). The parent snapshot is captured
-        ONCE per attempt and the commit happens AT that snapshot
-        (``append(expected_parent=...)``): a concurrent commit landing
-        between the anti-join's read and our manifest create loses the
-        manifest race and triggers the retry, instead of silently
-        committing an anti-join derived from a stale snapshot (which
-        would break key uniqueness).
+        the NEW committed HEAD — the anti-join (and ``retract``'s keys)
+        are re-derived against the winner's snapshot, so retried merges
+        stay idempotent per key (Iceberg's MERGE retry semantics). The
+        parent snapshot is captured ONCE per attempt and the manifest
+        is created exclusively AT ``parent + 1``: a concurrent commit
+        landing between the anti-join's read and our manifest create
+        loses the manifest race and triggers the retry, instead of
+        silently committing an anti-join derived from a stale snapshot
+        (which would break key uniqueness).
         """
         df = self._first_wins(df, key, order_col)
         # static bucket layout on the merge key: collect the batch's
@@ -1306,52 +1322,89 @@ class IceliteTable:
         last_err: ConcurrentCommitError | None = None
         for _ in range(3):
             parent = self.snapshot_id()
+            sid = parent + 1
             parent_total = self._total_rows_at(parent)
-            if not parent or parent == presieved_at:
-                # first commit (nothing committed, nothing to anti-join;
-                # the explicit skip matters because the empty read() is
-                # RDD-backed — the optimizer cannot constant-fold it
-                # away and the vacuous join would shuffle the whole
-                # batch), or the caller pre-sieved the batch against
-                # exactly this snapshot (r7; see docstring)
-                fresh = df
-            else:
-                existing = self.read(parent,
-                                     buckets=merge_buckets).select(key)
-                if prefilter_buckets:
-                    bucket = F.pmod(F.xxhash64(key),
-                                    F.lit(prefilter_buckets))
-                    batch_buckets = df.select(
-                        bucket.alias("__mb")).distinct()
-                    existing = existing.join(
-                        F.broadcast(batch_buckets),
-                        bucket == F.col("__mb"), "left_semi")
-                fresh = df.join(existing, key, "left_anti")
-            inserted = 0
-
-            def meta(new_files):
+            staged: list[str] = []
+            try:
+                deletes, deleted = [], 0
+                doomed = (retract(parent) if retract is not None and parent
+                          else None)
+                if doomed is not None:
+                    del_dir, deleted = self._stage_delete(
+                        doomed.select(key), sid)
+                    if deleted:
+                        staged.append(del_dir)
+                        deletes = [{"sid": sid, "dir": del_dir,
+                                    "key": key}]
+                    else:
+                        shutil.rmtree(del_dir, ignore_errors=True)
+                if not parent or parent == presieved_at:
+                    # first commit (nothing committed, nothing to
+                    # anti-join; the explicit skip matters because the
+                    # empty read() is RDD-backed — the optimizer cannot
+                    # constant-fold it away and the vacuous join would
+                    # shuffle the whole batch), or the caller pre-sieved
+                    # the batch against exactly this snapshot (r7; see
+                    # docstring)
+                    fresh = df
+                else:
+                    existing = self.read(parent,
+                                         buckets=merge_buckets).select(key)
+                    if prefilter_buckets:
+                        bucket = F.pmod(F.xxhash64(key),
+                                        F.lit(prefilter_buckets))
+                        batch_buckets = df.select(
+                            bucket.alias("__mb")).distinct()
+                        existing = existing.join(
+                            F.broadcast(batch_buckets),
+                            bucket == F.col("__mb"), "left_semi")
+                    if deletes:
+                        # keys this commit deletes are absent after it
+                        existing = existing.join(F.broadcast(
+                            self.spark.read.schema(StructType(
+                                [self.schema_at(parent)[key]]))
+                            .parquet(del_dir)), key, "left_anti")
+                    fresh = df.join(existing, key, "left_anti")
+                data_dir, new_files = self._stage_data(fresh, sid)
+                staged.append(data_dir)
                 # footer-derived count of what the staging job actually
                 # wrote: still ONE Spark job per merge (the write), and
                 # robust where an Observation is not (see
                 # _staged_row_count)
-                nonlocal inserted
                 inserted = self._staged_row_count(new_files)
-                m = {"inserted": inserted}
+                if retract is not None and not inserted:
+                    # a row delta commits no empty data file, and
+                    # nothing at all when nothing was staged
+                    shutil.rmtree(data_dir, ignore_errors=True)
+                    new_files = []
+                    if not deleted:
+                        return parent, 0, 0
+                manifest = {**self._inherited_meta(parent),
+                            "snapshot_id": sid, "parent": parent,
+                            "new_files": new_files, "inserted": inserted}
+                if deletes:
+                    manifest.update(deleted=deleted, deletes=deletes)
+                if self.stat_cols:
+                    manifest["file_stats"] = self._file_stats(new_files)
                 if parent_total is not None:
-                    # cumulative count rides the manifest: the job summary
-                    # reads it back with zero Spark jobs
-                    m["total_rows"] = parent_total + inserted
+                    # cumulative count rides the manifest: the job
+                    # summary reads it back with zero Spark jobs
+                    manifest["total_rows"] = (parent_total - deleted
+                                              + inserted)
                 if extra_meta:
                     # caller bookkeeping rides the commit atomically
                     # (e.g. incremental curation's source watermark)
-                    m.update(extra_meta)
-                return m
-
-            try:
-                sid = self.append(fresh, meta=meta, expected_parent=parent)
-            except ConcurrentCommitError as e:
+                    manifest.update(extra_meta)
+                self._commit_manifest(sid, manifest)
+            except BaseException as e:
+                for d in staged:
+                    shutil.rmtree(d, ignore_errors=True)
+                if not isinstance(e, ConcurrentCommitError):
+                    raise
                 last_err = e
                 continue
+            if retract is not None:
+                return sid, inserted, deleted
             return sid, inserted
         raise last_err  # type: ignore[misc]
 
@@ -1396,9 +1449,7 @@ class IceliteTable:
                 .join(keys, key, "left_semi").count()) if parent else 0
             data_dir, new_files = self._stage_data(df, sid)
             n_batch = self._staged_row_count(new_files)
-            del_dir = os.path.join(
-                self.root, "data", f"delete-{sid}-{uuid.uuid4().hex[:8]}")
-            keys.write.mode("error").parquet(del_dir)
+            del_dir, _ = self._stage_delete(keys, sid)
             manifest = {**self._inherited_meta(parent),
                         "snapshot_id": sid, "parent": parent,
                         "new_files": new_files, "upsert_mor": True,
@@ -1902,10 +1953,7 @@ class IceliteTable:
                     .select(key)
                     .join(keys, key, "left_semi").count()) \
                     if parent else 0
-                del_dir = os.path.join(
-                    self.root, "data",
-                    f"delete-{sid}-{uuid.uuid4().hex[:8]}")
-                keys.write.mode("error").parquet(del_dir)
+                del_dir, _ = self._stage_delete(keys, sid)
                 manifest = {**self._inherited_meta(parent),
                             "snapshot_id": sid, "parent": parent,
                             "new_files": [], "deleted": deleted,

@@ -29,33 +29,22 @@ def _df(spark, lo, hi, v):
                                  SCHEMA)
 
 
-def _jobs_planning(spark, group, plan):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        df = plan()
-    finally:
-        sc.setJobGroup(None, None)
-    return df, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("n_deletes", [1, 3])
 def test_planning_reads_over_pending_deletes_runs_no_job(spark, tmp_path,
-                                                         n_deletes):
+                                                         n_deletes,
+                                                         count_jobs):
     t = IceliteTable(spark, str(tmp_path / "t"), SCHEMA)
     t.append(_df(spark, 0, 20, 0))
     for i in range(1, n_deletes + 1):
         t.merge_upsert_mor(_df(spark, 0, 5 * i, i), "k")
-    df, jobs = _jobs_planning(spark, f"read-{n_deletes}", t.read)
+    df, jobs = count_jobs(spark, t.read)
     assert jobs == 0
     got = {r["k"]: r["v"] for r in df.collect()}
     assert len(got) == 20
     assert got["k0"] == n_deletes and got["k19"] == 0
-    _, jobs = _jobs_planning(spark, f"changes-{n_deletes}",
-                             lambda: t.read_changes(1))
+    _, jobs = count_jobs(spark, lambda: t.read_changes(1))
     assert jobs == 0
-    _, jobs = _jobs_planning(spark, f"changelog-{n_deletes}",
-                             lambda: t.read_changelog(1))
+    _, jobs = count_jobs(spark, lambda: t.read_changelog(1))
     assert jobs == 0
 
 

@@ -2,6 +2,9 @@
 the incremental curation pipeline built on them (`curate_table` /
 CLI `--curate-table`) — O(new data) per run on a growing crawl table."""
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -436,3 +439,215 @@ def test_curate_table_bucket_hashes_prunes_corpus_merge(
     want = {(r["url"], r["text"]) for r in curate(ext.read())
             .select("url", "text").collect()}
     assert got == want
+
+
+# --- one row-delta commit per curation ---------------------------------------
+# Spark jobs per curate_table call (local[4], 8 shuffle partitions).
+# With a separate retraction commit and emptiness probes these were 4
+# (first), 21 (retracting: stale probe, delete_keys' distinct, persist,
+# count and key write, gate probe, merge) and 6 (plain incremental).
+FIRST_BUDGET = 3
+RETRACT_BUDGET = 10
+INCREMENTAL_BUDGET = 5
+
+
+def _recrawled(spark, tmp_path, name):
+    """A 100-row extracted table, curated once, then re-crawled on urls
+    1..31 with new content: the next curation retracts."""
+    root = str(tmp_path / f"{name}-root")
+    corpus_root = str(tmp_path / f"{name}-corpus")
+    run_extraction(spark, _pages(spark, 0, 100), root)
+    ext = extracted_table(spark, root)
+    curate_table(spark, corpus_root, ext)
+    run_extraction(spark, spark.createDataFrame(
+        _recrawl_pages(1, 31, 301), schema=PAGES_SCHEMA), root,
+        recrawl=True)
+    return root, corpus_root, ext
+
+
+def _corpus(spark, corpus_root):
+    from sanskrit_ocr_spark.extract.curate import _corpus_schema
+    return IceliteTable(spark, corpus_root, _corpus_schema())
+
+
+def _texts(df):
+    return {r["text"] for r in df.select("text").collect()}
+
+
+def _unnamed_dirs(corpus_root):
+    """``commit-*``/``delete-*`` directories under ``data/`` that no
+    manifest names."""
+    data = os.path.join(corpus_root, "data")
+    named = set()
+    commits = os.path.join(corpus_root, "_icelite", "commits")
+    for fn in os.listdir(commits):
+        with open(os.path.join(commits, fn)) as f:
+            m = json.load(f)
+        paths = list(m.get("new_files", []))
+        paths += [d["dir"] for d in m.get("deletes", [])]
+        for g in m.get("file_groups", []):
+            paths += g[1]
+        for p in paths:
+            named.add(os.path.relpath(p, data).split(os.sep)[0])
+    return sorted(n for n in os.listdir(data)
+                  if n.startswith(("commit-", "delete-", "__commit="))
+                  and n not in named)
+
+
+def test_curation_job_budgets(spark, tmp_path, count_jobs):
+    """Job budgets: a first curation, a retracting curation, a no-op
+    curation (watermark at head) and a plain incremental one run exactly
+    their pinned job counts — the no-op none at all."""
+    root = str(tmp_path / "jobs-root")
+    corpus_root = str(tmp_path / "jobs-corpus")
+    run_extraction(spark, _pages(spark, 0, 100), root)
+    ext = extracted_table(spark, root)
+
+    def curation():
+        return count_jobs(spark,
+                          lambda: curate_table(spark, corpus_root, ext))
+
+    r, jobs = curation()
+    assert r["inserted"] > 0
+    assert jobs == FIRST_BUDGET
+
+    run_extraction(spark, spark.createDataFrame(
+        _recrawl_pages(1, 31, 301), schema=PAGES_SCHEMA), root,
+        recrawl=True)
+    r, jobs = curation()
+    assert r["retracted"] > 0 and r["inserted"] > 0
+    assert jobs == RETRACT_BUDGET
+
+    r, jobs = curation()
+    assert r["inserted"] == 0 and r["retracted"] == 0
+    assert jobs == 0
+
+    run_extraction(spark, _pages(spark, 100, 200), root)
+    r, jobs = curation()
+    assert r["inserted"] > 0 and r["retracted"] == 0
+    assert jobs == INCREMENTAL_BUDGET
+
+
+def test_retracting_curation_commits_one_snapshot(spark, tmp_path):
+    """A retracting curation adds exactly one corpus snapshot, and that
+    snapshot records both counts and the extraction watermark."""
+    _, corpus_root, ext = _recrawled(spark, tmp_path, "one")
+    corpus = _corpus(spark, corpus_root)
+    before = corpus.snapshot_id()
+    r = curate_table(spark, corpus_root, ext)
+    assert r["retracted"] > 0 and r["inserted"] > 0
+    assert corpus.snapshot_id() == before + 1 == r["corpus_snapshot"]
+    head = corpus.history()[0]
+    assert head["inserted"] == r["inserted"]
+    assert head["deleted"] == r["retracted"]
+    assert head["extracted_watermark"] == ext.snapshot_id()
+    assert r["corpus_total"] == corpus.read().count()
+    assert _texts(corpus.read()) == _texts(curate(ext.read()))
+
+
+def test_same_commit_reinsert_survives(spark, tmp_path):
+    """One delta recrawls url A away from text T while a new url B
+    carries T: the row delta deletes A's T and inserts B's T in the same
+    commit, and T survives (a delete at s removes only rows committed
+    before s), attributed to B."""
+    import pandas as pd
+
+    root = str(tmp_path / "reins-root")
+    corpus_root = str(tmp_path / "reins-corpus")
+    run_extraction(spark, _pages(spark, 0, 100), root)
+    ext = extracted_table(spark, root)
+    curate_table(spark, corpus_root, ext)
+    corpus = _corpus(spark, corpus_root)
+    a_url = pages_pandas(5, 1)["url"].iloc[0]
+    t_text = (corpus.read().filter(F.col("url") == a_url)
+              .collect()[0]["text"])
+
+    b = pages_pandas(5, 1).reset_index(drop=True)
+    b["url"] = "https://moved.example/000005"
+    b["warc_ts"] = b["warc_ts"] + pd.Timedelta(days=365)
+    delta = pd.concat([_recrawl_pages(5, 6, 305), b], ignore_index=True)
+    run_extraction(spark, spark.createDataFrame(delta, schema=PAGES_SCHEMA),
+                   root, recrawl=True)
+    before = corpus.snapshot_id()
+    r = curate_table(spark, corpus_root, ext)
+    assert r["retracted"] == 1
+    assert corpus.snapshot_id() == before + 1
+
+    rows = corpus.read().filter(F.col("text") == t_text).collect()
+    assert [row["url"] for row in rows] == ["https://moved.example/000005"]
+    assert r["corpus_total"] == corpus.read().count()
+    assert _texts(corpus.read()) == _texts(curate(ext.read()))
+
+
+def test_concurrent_writer_rederives_retraction(spark, tmp_path,
+                                                 monkeypatch):
+    """Another handle commits to the corpus between the derivation of
+    the stale keys and the row delta's manifest create — here it
+    retracts one of those keys itself. The lost compare-and-swap retries
+    against the new parent, re-derives the keys, and every count stays
+    exact."""
+    import pyarrow.parquet as pq
+
+    _, corpus_root, ext = _recrawled(spark, tmp_path, "cas")
+    other = _corpus(spark, corpus_root)
+    orig = IceliteTable._commit_manifest
+    seen = {}
+
+    def interloped(self, sid, manifest):
+        if self.root == corpus_root and manifest.get("deletes") \
+                and not seen:
+            staged = manifest["deletes"][0]["dir"]
+            keys = sorted(pq.read_table(staged).column("text_md5")
+                          .to_pylist())
+            seen.update(stale=len(keys), first_dir=staged)
+            other.delete_keys(
+                spark.createDataFrame([(keys[0],)], "text_md5 string"),
+                "text_md5")
+        return orig(self, sid, manifest)
+
+    monkeypatch.setattr(IceliteTable, "_commit_manifest", interloped)
+    r = curate_table(spark, corpus_root, ext)
+    monkeypatch.undo()
+
+    corpus = _corpus(spark, corpus_root)
+    assert seen["stale"] > 1
+    assert r["retracted"] == seen["stale"] - 1
+    assert not os.path.exists(seen["first_dir"])
+    assert [h["kind"] for h in corpus.history()[:2]] == ["upsert", "delete"]
+    assert r["corpus_total"] == corpus.read().count()
+    assert _texts(corpus.read()) == _texts(curate(ext.read()))
+    assert _unnamed_dirs(corpus_root) == []
+
+
+def test_curation_staging_nothing_leaves_no_residue(spark, tmp_path):
+    """A curation that stages nothing leaves no unnamed ``commit-*`` or
+    ``delete-*`` directory: neither an identical recrawl (empty stale
+    set, all-duplicate texts: the watermark advances on a metadata-only
+    commit) nor an empty delta (no commit at all)."""
+    import pandas as pd
+
+    root = str(tmp_path / "res-root")
+    corpus_root = str(tmp_path / "res-corpus")
+    run_extraction(spark, _pages(spark, 0, 100), root)
+    ext = extracted_table(spark, root)
+    curate_table(spark, corpus_root, ext)
+    corpus = _corpus(spark, corpus_root)
+
+    same = pages_pandas(1, 30).reset_index(drop=True)
+    same["warc_ts"] = same["warc_ts"] + pd.Timedelta(days=365)
+    run_extraction(spark, spark.createDataFrame(same, schema=PAGES_SCHEMA),
+                   root, recrawl=True)
+    before = corpus.snapshot_id()
+    r = curate_table(spark, corpus_root, ext)
+    assert r["inserted"] == 0 and r["retracted"] == 0
+    assert r["watermark"] == ext.snapshot_id()
+    assert corpus.snapshot_id() == before + 1
+    assert corpus.history()[0]["kind"] == "meta"
+    assert _unnamed_dirs(corpus_root) == []
+
+    run_extraction(spark, _pages(spark, 0, 100), root)  # 0-insert resume
+    before = corpus.snapshot_id()
+    r = curate_table(spark, corpus_root, ext)
+    assert r["inserted"] == 0 and r["watermark"] < ext.snapshot_id()
+    assert corpus.snapshot_id() == before
+    assert _unnamed_dirs(corpus_root) == []
